@@ -983,7 +983,7 @@ def cmd_search(args) -> None:
 
 
 def _emit_federated_telemetry(
-    t_sink: list, query: str, args, start_ns: int,
+    t_sink: list, shape: dict, args, start_ns: int,
     error: str | None = None,
 ) -> None:
     """One telemetry span per member archive on the federated path (the
@@ -996,15 +996,10 @@ def _emit_federated_telemetry(
     archives omit the match counters (per-archive match attribution
     does not exist in the single-plan shape, documented in STATUS.md).
     A job-level failure marks every member span failed, like the
-    reference's per-archive error recording."""
-    from clp_spark.operators.kql import parse_kql
-    from clp_spark.operators.telemetry import (
-        SearchTelemetrySpan,
-        export_spans,
-        query_shape_metrics,
-    )
+    reference's per-archive error recording. ``shape`` is the query's
+    shape metrics, computed before the search starts."""
+    from clp_spark.operators.telemetry import SearchTelemetrySpan, export_spans
 
-    shape = query_shape_metrics(parse_kql(query), args.tge, args.tle)
     payloads = []
     for rec in t_sink:
         span = SearchTelemetrySpan(start_ns=start_ns)
@@ -1428,6 +1423,15 @@ def cmd_search_kql(args) -> None:
         t_sink = (
             [] if getattr(args, "enable_telemetry", False) else None
         )
+        t_shape = None
+        if t_sink is not None:
+            # parsed once, before the search: a query that fails to parse
+            # raises here, and the telemetry in `finally` cannot re-raise
+            # over the original error
+            from clp_spark.operators.kql import parse_kql
+            from clp_spark.operators.telemetry import query_shape_metrics
+
+            t_shape = query_shape_metrics(parse_kql(query), args.tge, args.tle)
         t_start = time.time_ns() if t_sink is not None else 0
         t_err: str | None = None
         try:
@@ -1454,7 +1458,7 @@ def cmd_search_kql(args) -> None:
         finally:
             if t_sink is not None:
                 _emit_federated_telemetry(
-                    t_sink, query, args, t_start, error=t_err
+                    t_sink, t_shape, args, t_start, error=t_err
                 )
         return
     if args.archive_id:

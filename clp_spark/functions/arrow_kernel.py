@@ -1,6 +1,6 @@
 """mapInArrow CLP encode: zero per-row Python anywhere.
 
-The pandas-UDF path pays per-row Arrow↔Python conversion for the list/string
+A pandas UDF would pay per-row Arrow↔Python conversion for the list/string
 output columns (~10× the kernel cost). This path works on pyarrow
 RecordBatches directly: tokens arrive as a ListArray whose values/offsets are
 numpy views, the numpy state-machine kernel (encode_kernel_np.encode_core)

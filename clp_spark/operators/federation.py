@@ -32,9 +32,9 @@ Spark-first design — ONE job across N archives, not N sequential searches:
    rows; one semi-join of that union against the candidate table selects
    which split directories each archive even lists.
 5. Decode + final wildcard verification run once over the joined
-   candidates (mapInArrow numpy kernel), identical to the single-archive
-   lifecycle — per-subquery var predicates become
-   `array_contains(_ks, k) AND pred_k`, OR-reduced.
+   candidates through the single-archive path's own tail
+   (`search.verify_candidates`) — subquery k's base predicate is
+   `array_contains(_ks, k)` where the single archive uses its id set.
 
 At 10^5+ archives the per-archive `spark.read` union in (2)/(3) is the
 limit — there, archives live in ONE table partitioned by archive_id (what
@@ -53,13 +53,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clp_spark.functions.wildcard import wildcard_match
-from clp_spark.operators.decode import decode_df
 from clp_spark.operators.search import (
     MATCH_ALL,
-    _subsequence_pred,
     compile_subqueries,
-    tagged_vars_col,
+    verify_candidates,
 )
 
 METADATA_FILE = "metadata.json"
@@ -344,6 +341,10 @@ def _execute_compiled(
         )
         return df.select(*_KEEP, "message")
 
+    def _with_logtype(df: DataFrame) -> DataFrame:
+        return df.join(F.broadcast(lt_u), ["archive_id", "logtype_id"], "left")
+
+    keep = _KEEP + ["ts_pat"]
     if subs == MATCH_ALL:
         sinks_u = _ts_filter(
             reduce(
@@ -351,12 +352,8 @@ def _execute_compiled(
                 [_normalized_sinks(spark, aid, p) for aid, p in archives],
             )
         )
-        with_lt = sinks_u.join(
-            F.broadcast(lt_u), ["archive_id", "logtype_id"], "left"
-        )
-        out = decode_df(with_lt, _KEEP + ["ts_pat"])
         return _finish(
-            out.where(wildcard_match(F.col("message"), query, ignore_case))
+            verify_candidates(sinks_u, MATCH_ALL, keep, query, ignore_case, _with_logtype)
         )
 
     # candidate (archive_id, logtype_id) -> matching subquery set, resolved
@@ -401,30 +398,9 @@ def _execute_compiled(
     sinks_u = _ts_filter(reduce(DataFrame.unionByName, sink_parts))
 
     joined = sinks_u.join(F.broadcast(cands), ["archive_id", "logtype_id"])
-
-    tagged = tagged_vars_col()
-    preds, exact_preds = [], []
-    for k, sq in enumerate(subs):
-        p = F.array_contains(F.col("_ks"), k)
-        if sq.ordered_exact:
-            p = p & _subsequence_pred(tagged, sq.ordered_exact)
-        for strings in sq.set_constraints:
-            def _dict_contains(ss):
-                return lambda x: (x["k"] == F.lit(0x12)) & x["v"].isin(ss)
-
-            p = p & F.exists(tagged, _dict_contains(strings))
-        preds.append(p)
-        if not sq.wildcard_match_required:
-            exact_preds.append(p)
-
-    any_candidate = reduce(lambda a, b: a | b, preds)
-    no_verify = reduce(lambda a, b: a | b, exact_preds) if exact_preds else F.lit(False)
-
-    candidates = (
-        joined.where(any_candidate)
-        .withColumn("_no_verify", no_verify)
-        .join(F.broadcast(lt_u), ["archive_id", "logtype_id"], "left")
+    # subquery k's base predicate: its logtype pattern matched the row's
+    # (archive_id, logtype_id)
+    bases = [(F.array_contains(F.col("_ks"), k), sq) for k, sq in enumerate(subs)]
+    return _finish(
+        verify_candidates(joined, bases, keep, query, ignore_case, _with_logtype)
     )
-    decoded = decode_df(candidates, _KEEP + ["ts_pat", "_no_verify"])
-    final = F.col("_no_verify") | wildcard_match(F.col("message"), query, ignore_case)
-    return _finish(decoded.where(final))

@@ -1208,6 +1208,9 @@ def search_json_archives(
                 if t_rec is not None:
                     t_rec["termination_stage"] = "range_index_matching"
                 continue
+            # the rewritten bounds are this archive's own: archives share a
+            # scan group only when their rewrites are equal
+            ast_key = repr(d_ast)
         # archive-level timestamp prune (EvaluateTimestampIndex,
         # clp-s.cpp:230-236): stored [begin, end] disjoint from the
         # search window → the archive contributes nothing, skip it
@@ -1215,7 +1218,6 @@ def search_json_archives(
             if t_rec is not None:
                 t_rec["termination_stage"] = "time_range_matching"
             continue
-            ast_key = repr(d_ast)
         for entry in manifest["schemas"]:
             if entry["schema_id"] == _SCALAR_ID:
                 continue  # no keys → never matches a KQL predicate

@@ -25,7 +25,9 @@ partition pruning).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from itertools import product
+from operator import or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +37,7 @@ from clp_spark.functions.wildcard import (
     wildcard_match,
     wildcard_to_like_pattern,
 )
+from clp_spark.operators.decode import decode_df
 from clp_spark.oracle.encoder import (
     _NON_DELIM,
     DICT_PLACEHOLDER,
@@ -574,6 +577,58 @@ def candidate_logtype_ids(compiled) -> list | None:
     return sorted(out)
 
 
+def _dict_contains(strings: list[str]):
+    return lambda x: (x["k"] == F.lit(0x12)) & x["v"].isin(strings)
+
+
+def verify_candidates(
+    rows: DataFrame,
+    subqueries: str | list[tuple[Column, SubQuery]],
+    keep: list[str],
+    query: str,
+    ignore_case: bool,
+    attach_logtype=lambda df: df,
+) -> DataFrame:
+    """The candidate → decode → verify tail shared by every text search.
+
+    ``subqueries`` is MATCH_ALL or a list of (base predicate, SubQuery)
+    pairs, the base being the caller's logtype-candidate test for that
+    subquery. Each subquery ANDs its variable constraints onto its base;
+    rows matching any subquery decode (keeping ``keep``) and re-verify
+    against the whole query unless an exact subquery (no
+    wildcard_match_required) already proves the match. MATCH_ALL decodes
+    every row and verifies each. ``attach_logtype`` adds the ``logtype``
+    column right before the decode."""
+    if subqueries == MATCH_ALL:
+        # no subquery can narrow the scan (reference: SupercedesAllSubQueries)
+        # → full scan, decode (mapInArrow numpy kernel — no per-row Python),
+        # and verify the original query per message
+        decoded = decode_df(attach_logtype(rows), keep)
+        return decoded.where(wildcard_match(F.col("message"), query, ignore_case))
+
+    tagged = tagged_vars_col()
+    candidate_preds = []
+    exact_preds = []  # subqueries not requiring final verification
+    for pred, sq in subqueries:
+        if sq.ordered_exact:
+            pred = pred & _subsequence_pred(tagged, sq.ordered_exact)
+        for strings in sq.set_constraints:
+            pred = pred & F.exists(tagged, _dict_contains(strings))
+        candidate_preds.append(pred)
+        if not sq.wildcard_match_required:
+            exact_preds.append(pred)
+    no_verify = reduce(or_, exact_preds) if exact_preds else F.lit(False)
+
+    # the exact-subquery flag is computed on the encoded columns BEFORE the
+    # decode stage drops them, then carried through mapInArrow as a column
+    candidates = attach_logtype(
+        rows.where(reduce(or_, candidate_preds)).withColumn("_no_verify", no_verify)
+    )
+    decoded = decode_df(candidates, keep + ["_no_verify"])
+    final = F.col("_no_verify") | wildcard_match(F.col("message"), query, ignore_case)
+    return decoded.where(final)
+
+
 def search_archive(
     sinks: DataFrame,
     logtype_dict: DataFrame,
@@ -585,8 +640,6 @@ def search_archive(
     """Matched rows (doc_id, source, logtype_id, message) for a CLP wildcard
     query. Pass ``compiled`` (a compile_query result) to reuse an existing
     compilation — e.g. after segment pruning already probed the dictionaries."""
-    from clp_spark.operators.decode import decode_df
-
     # archives carrying per-message timestamp patterns (text-log archives)
     # get the timestamp text re-rendered into matched messages — clg prints
     # the full original line; the wildcard MATCHES the stored body (the
@@ -610,43 +663,9 @@ def search_archive(
 
     if compiled is None:
         compiled = compile_query(query, logtype_dict, var_dict, ignore_case)
-    if compiled == MATCH_ALL:
-        # no subquery can narrow the scan (reference: SupercedesAllSubQueries)
-        # → full scan, decode (mapInArrow numpy kernel — no per-row Python),
-        # and verify the original query per message
-        out = decode_df(with_lt, keep)
-        return _finish(out.where(wildcard_match(F.col("message"), query, ignore_case)))
     if not compiled:
         return _finish(decode_df(with_lt, keep).where(F.lit(False)))
-
-    tagged = tagged_vars_col()
-    candidate_preds = []
-    exact_preds = []  # subqueries not requiring final verification
-    for ids, sq in compiled:
-        pred = _ids_predicate(F.col("logtype_id"), ids)
-        if sq.ordered_exact:
-            pred = pred & _subsequence_pred(tagged, sq.ordered_exact)
-        for strings in sq.set_constraints:
-            def _dict_contains(ss):
-                return lambda x: (x["k"] == F.lit(0x12)) & x["v"].isin(ss)
-
-            pred = pred & F.exists(tagged, _dict_contains(strings))
-        candidate_preds.append(pred)
-        if not sq.wildcard_match_required:
-            exact_preds.append(pred)
-
-    any_candidate = candidate_preds[0]
-    for p in candidate_preds[1:]:
-        any_candidate = any_candidate | p
-    no_verify = None
-    for p in exact_preds:
-        no_verify = p if no_verify is None else (no_verify | p)
-
-    # the exact-subquery flag is computed on the encoded columns BEFORE the
-    # decode stage drops them, then carried through mapInArrow as a column
-    candidates = with_lt.where(any_candidate).withColumn(
-        "_no_verify", no_verify if no_verify is not None else F.lit(False)
-    )
-    decoded = decode_df(candidates, keep + ["_no_verify"])
-    final = F.col("_no_verify") | wildcard_match(F.col("message"), query, ignore_case)
-    return _finish(decoded.where(final))
+    subqueries = compiled if compiled == MATCH_ALL else [
+        (_ids_predicate(F.col("logtype_id"), ids), sq) for ids, sq in compiled
+    ]
+    return _finish(verify_candidates(with_lt, subqueries, keep, query, ignore_case))

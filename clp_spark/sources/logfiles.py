@@ -29,10 +29,11 @@ from clp_spark.operators.dictionary import assign_sorted_ids
 from clp_spark.operators.messages import assemble_multiline
 
 
-# Any URI scheme (file:, hdfs://, s3a://, ...) — raw local paths never
-# match, so scheme presence separates input_file_name() URIs (encoded)
-# from binaryFile-derived paths (raw, scheme-stripped at the readers).
-_URI_SCHEME_RE = "^[A-Za-z][A-Za-z0-9+.-]*:"
+# The local `file:` scheme or any `<scheme>://` URI (hdfs://, s3a://, ...)
+# — scheme presence separates input_file_name() URIs (encoded) from
+# binaryFile-derived paths (raw, scheme-stripped at the readers). A bare
+# colon is not enough: `data:1.log` and `C:/logs/a.log` are raw paths.
+_URI_SCHEME_RE = "^(file:|[A-Za-z][A-Za-z0-9+.-]*://)"
 
 
 def decode_file_uri_expr(col):

@@ -1,15 +1,26 @@
-"""Parity tests: vectorized encode kernel vs the pure-Python oracle."""
+"""Parity tests: the production mapInArrow encoders vs the pure-Python oracle.
 
-import pandas as pd
+Both encoders run here exactly as Spark runs them, as functions over an
+iterator of Arrow RecordBatches, with no Spark session: ``make_encode_arrow``
+over a string column and ``make_detok_encode_arrow`` over a token-id list
+column. Spark hands mapInArrow batches whose arrays can start at a non-zero
+offset, so every case also runs on a batch sliced past a few leading rows.
+"""
+
+import re
+import subprocess
+import sys
+from pathlib import Path
+
+import pyarrow as pa
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from clp_spark.functions.encode_kernel import encode_batch as encode_batch_regex
-from clp_spark.functions.encode_kernel_np import encode_batch_np
+from clp_spark.functions.arrow_kernel import make_detok_encode_arrow, make_encode_arrow
 from clp_spark.oracle import decode_message, encode_message
 
-encode_batch = encode_batch_regex  # default for module-level helpers
+PAD = "pad 1 x=2 \\\x11 ff"  # leading rows that a sliced batch skips
 
 FIXTURE_MESSAGES = [
     "",
@@ -32,30 +43,58 @@ FIXTURE_MESSAGES = [
 ]
 
 
-KERNELS = {"regex": encode_batch_regex, "numpy": encode_batch_np}
+def _sliced_batch(column: pa.Array, name: str, skip: int) -> pa.RecordBatch:
+    """Batch of ``column`` plus a doc_id passthrough, sliced past ``skip`` rows
+    (doc_id then reads 0..n-1 for the rows kept)."""
+    ids = pa.array(range(-skip, len(column) - skip), pa.int64())
+    return pa.RecordBatch.from_arrays([ids, column], ["doc_id", name]).slice(skip)
 
 
-def assert_batch_matches_oracle(messages, kernel=encode_batch_regex):
-    out = kernel(pd.Series(messages, dtype=object))
+def encode_text(messages, skip=0):
+    batch = _sliced_batch(pa.array([PAD] * skip + messages, pa.string()), "message", skip)
+    (out,) = make_encode_arrow(["doc_id"], "message")(iter([batch]))
+    return out
+
+
+def encode_tokens(messages, skip=0):
+    """Detokenize + encode: each message is cut into vocab pieces of up to
+    three characters, so tokens_to_buffer must splice them back together."""
+    pieces = [re.findall(r".{1,3}", m, re.S) for m in [PAD] * skip + messages]
+    vocab = sorted({p for ps in pieces for p in ps})
+    ix = {p: i for i, p in enumerate(vocab)}
+    tokens = pa.array([[ix[p] for p in ps] for ps in pieces], pa.list_(pa.int32()))
+    batch = _sliced_batch(tokens, "tokens", skip)
+    (out,) = make_detok_encode_arrow(vocab, ["doc_id"], "tokens")(iter([batch]))
+    return out
+
+
+ENCODERS = {
+    "numpy": encode_text,
+    "numpy-sliced": lambda m: encode_text(m, skip=3),
+    "detok": encode_tokens,
+    "detok-sliced": lambda m: encode_tokens(m, skip=3),
+}
+
+
+def assert_batch_matches_oracle(messages, encoder):
+    out = encoder(messages).to_pydict()
+    assert out["doc_id"] == list(range(len(messages)))
     for i, msg in enumerate(messages):
         exp = encode_message(msg)
         assert out["logtype"][i] == exp.logtype, f"logtype mismatch for {msg!r}"
-        assert list(out["placeholders"][i]) == exp.placeholders, f"placeholders for {msg!r}"
-        assert [int(x) for x in out["encoded_vars"][i]] == exp.encoded_vars, (
-            f"encoded_vars for {msg!r}"
-        )
-        assert list(out["dict_vars"][i]) == exp.dict_vars, f"dict_vars for {msg!r}"
+        assert out["placeholders"][i] == exp.placeholders, f"placeholders for {msg!r}"
+        assert out["encoded_vars"][i] == exp.encoded_vars, f"encoded_vars for {msg!r}"
+        assert out["dict_vars"][i] == exp.dict_vars, f"dict_vars for {msg!r}"
         # and the batch output round-trips through the oracle decoder
         assert (
-            decode_message(out["logtype"][i], [int(x) for x in out["encoded_vars"][i]],
-                           list(out["dict_vars"][i]))
+            decode_message(out["logtype"][i], out["encoded_vars"][i], out["dict_vars"][i])
             == msg
         )
 
 
-@pytest.mark.parametrize("kernel", list(KERNELS), ids=list(KERNELS))
-def test_fixture_messages(kernel):
-    assert_batch_matches_oracle(FIXTURE_MESSAGES, KERNELS[kernel])
+@pytest.mark.parametrize("encoder", list(ENCODERS))
+def test_fixture_messages(encoder):
+    assert_batch_matches_oracle(FIXTURE_MESSAGES, ENCODERS[encoder])
 
 
 # alphabet biased toward the interesting characters
@@ -66,9 +105,10 @@ _ALPHABET = st.sampled_from(
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(st.text(_ALPHABET, min_size=0, max_size=60), min_size=1, max_size=20))
+@example([""])  # a batch of one empty message: the encoders pad its buffer
 def test_fuzz_parity(messages):
-    assert_batch_matches_oracle(messages, encode_batch_regex)
-    assert_batch_matches_oracle(messages, encode_batch_np)
+    for encoder in ENCODERS.values():
+        assert_batch_matches_oracle(messages, encoder)
 
 
 @settings(max_examples=100, deadline=None)
@@ -84,5 +124,19 @@ def test_fuzz_parity(messages):
     )
 )
 def test_fuzz_numeric_tokens(tokens):
-    assert_batch_matches_oracle([" ".join(tokens)], encode_batch_regex)
-    assert_batch_matches_oracle([" ".join(tokens)], encode_batch_np)
+    for encoder in ENCODERS.values():
+        assert_batch_matches_oracle([" ".join(tokens)], encoder)
+
+
+def test_kernels_import_without_pandas_or_pyspark():
+    """The Arrow kernels run inside mapInArrow workers: importing them must
+    load neither pandas nor pyspark."""
+    code = (
+        "import sys, clp_spark.functions.arrow_kernel, clp_spark.functions.decode_kernel_np; "
+        "print(sorted(m for m in ('pandas', 'pyspark') if m in sys.modules))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "[]"

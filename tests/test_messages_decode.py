@@ -2,14 +2,13 @@
 
 from datetime import datetime, timezone
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from clp_spark.functions.encode_kernel import encode_batch
-from clp_spark.operators.decode import reconstruct_messages
+from clp_spark.operators.decode import decode_df
 from clp_spark.operators.indexer import table_column_stats
 from clp_spark.operators.messages import assemble_multiline
+from clp_spark.oracle import encode_message
 
 
 def ms(s: str) -> int:
@@ -160,37 +159,34 @@ class TestDecodeJoin:
             "plain text only",
             "hex deadBEEF and big 10000000000000000000",
         ]
-        enc = encode_batch(pd.Series(msgs, dtype=object))
         rows = [
-            (str(i), enc["logtype"][i], list(enc["encoded_vars"][i]),
-             list(enc["dict_vars"][i]))
-            for i in range(len(msgs))
+            (str(i), e.logtype, e.encoded_vars, e.dict_vars)
+            for i, e in enumerate(map(encode_message, msgs))
         ]
         df = spark.createDataFrame(
             rows, "doc_id string, logtype string, encoded_vars array<long>, "
                   "dict_vars array<string>"
         )
-        got = {r["doc_id"]: r["message"] for r in reconstruct_messages(df).collect()}
+        got = {r["doc_id"]: r["message"] for r in decode_df(df, ["doc_id"]).collect()}
         for i, m in enumerate(msgs):
             assert got[str(i)] == m
 
     def test_reconstruct_via_dict_join(self, spark):
         msgs = ["a 1", "a 2", "b 9"]
-        enc = encode_batch(pd.Series(msgs, dtype=object))
-        lts = sorted(set(enc["logtype"]))
-        lt_id = {lt: i for i, lt in enumerate(lts)}
+        enc = [encode_message(m) for m in msgs]
+        lt_id = {lt: i for i, lt in enumerate(sorted({e.logtype for e in enc}))}
         rows = [
-            (str(i), lt_id[enc["logtype"][i]], list(enc["encoded_vars"][i]),
-             list(enc["dict_vars"][i]))
-            for i in range(len(msgs))
+            (str(i), lt_id[e.logtype], e.encoded_vars, e.dict_vars)
+            for i, e in enumerate(enc)
         ]
         df = spark.createDataFrame(
             rows, "doc_id string, logtype_id long, encoded_vars array<long>, "
                   "dict_vars array<string>"
         )
         ltd = spark.createDataFrame(list(lt_id.items()), "logtype string, logtype_id long")
-        got = {r["doc_id"]: r["message"]
-               for r in reconstruct_messages(df, ltd).collect()}
+        # rows carrying only logtype_id take the broadcast decode join first
+        joined = df.join(F.broadcast(ltd), "logtype_id")
+        got = {r["doc_id"]: r["message"] for r in decode_df(joined, ["doc_id"]).collect()}
         assert got == {str(i): m for i, m in enumerate(msgs)}
 
 

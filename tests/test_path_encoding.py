@@ -52,6 +52,27 @@ class TestDecodeHelper:
         assert strip_file_scheme("hdfs://h/x") == "hdfs://h/x"
         assert strip_file_scheme("/tmp/x") == "/tmp/x"
 
+    # a colon alone does not make a URI: only `file:` and `<scheme>://` do
+    COLON_CASES = [
+        ("data:1%41.log", "data:1%41.log"),
+        ("C:/logs/a%41.log", "C:/logs/a%41.log"),
+        ("/abs/p%41th", "/abs/p%41th"),
+        ("file:/abs/p%41th", "/abs/pAth"),
+        ("s3a://b/p%41th", "s3a://b/pAth"),
+    ]
+
+    def test_colon_paths_are_not_uris(self, spark):
+        from clp_spark.sources.logfiles import (
+            decode_file_uri,
+            decode_file_uri_expr,
+        )
+
+        for raw, want in self.COLON_CASES:
+            assert decode_file_uri(raw) == want, raw
+        df = spark.createDataFrame([(r,) for r, _ in self.COLON_CASES], "p string")
+        got = [r["d"] for r in df.select(decode_file_uri_expr("p").alias("d")).collect()]
+        assert got == [w for _, w in self.COLON_CASES]
+
 
 class TestTextLifecycle:
     def test_compress_extract_nasty_filename(self, spark, tmp_path, capsys):

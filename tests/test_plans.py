@@ -28,15 +28,12 @@ class TestPlanShapes:
         assert "BroadcastHashJoin" in plan_of(joined)
 
     def test_logtype_enrich_broadcast(self, spark):
-        from clp_spark.functions.encode_kernel import encode_batch
-        import pandas as pd
+        from clp_spark.oracle import encode_message
 
-        enc = encode_batch(pd.Series(["a 1", "b 2"], dtype=object))
-        sinks = spark.createDataFrame(
-            [(enc["logtype"][i],) for i in range(2)], "logtype string"
-        )
+        logtypes = [encode_message(m).logtype for m in ["a 1", "b 2"]]
+        sinks = spark.createDataFrame([(lt,) for lt in logtypes], "logtype string")
         lt = spark.createDataFrame(
-            [(enc["logtype"][i], i) for i in range(2)], "logtype string, logtype_id long"
+            [(lt, i) for i, lt in enumerate(logtypes)], "logtype string, logtype_id long"
         )
         assert "BroadcastHashJoin" in plan_of(enrich_with_logtype_ids(sinks, lt))
 

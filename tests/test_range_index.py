@@ -219,6 +219,34 @@ class TestMultiArchiveSplits:
         assert res.count() == 0
 
 
+class TestFederatedRewritePerArchive:
+    def test_same_file_at_different_ranges(self, spark, tmp_path):
+        """x.jsonl holds log_event_idx [3, 5) in archive a and [0, 2) in
+        archive b: each archive's '$' rewrite must bound its own rows, so
+        the two archives never share one rewritten filter."""
+        w, x = tmp_path / "w.jsonl", tmp_path / "x.jsonl"
+        w.write_text('{"k": 0}\n{"k": 1}\n{"k": 2}\n')
+        x.write_text('{"k": 10}\n{"k": 11}\n')
+        root = tmp_path / "archs"
+        root.mkdir()
+        cli.main(["c", str(root / "a"), str(w), str(x), "--json"])
+        cli.main(["c", str(root / "b"), str(x), "--json"])
+        ranges = set()
+        for aid in ("a", "b"):
+            with open(root / aid / "manifest.json") as f:
+                for r in json.load(f)["range_index"]:
+                    if r["f"]["_filename"].endswith("x.jsonl"):
+                        ranges.add((r["s"], r["e"]))
+        assert len(ranges) == 2  # the premise: x.jsonl's ranges differ
+        res = search_json_archives(
+            spark, str(root), '$_filename: "*x.jsonl" AND k: *'
+        )
+        got = sorted(
+            (r["archive_id"], json.loads(r["json"])["k"]) for r in res.collect()
+        )
+        assert got == [("a", 10), ("a", 11), ("b", 10), ("b", 11)]
+
+
 class TestAstRewrite:
     RINDEX = [
         {"s": 0, "e": 5, "f": {"_filename": "x", "_file_split_number": 0,

@@ -6,7 +6,6 @@ Modeled on the reference's golden query corpus approach
 
 import re
 
-import pandas as pd
 import pytest
 from pyspark.sql.types import (
     ArrayType,
@@ -17,8 +16,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from clp_spark.functions.encode_kernel import encode_batch
 from clp_spark.operators.search import MATCH_ALL, compile_query, search_archive
+from clp_spark.oracle import encode_message
 
 CORPUS = [
     "here is a string with a small int 4938 and a very large int 10000000000000000000",
@@ -63,10 +62,10 @@ def naive_wildcard_match(msg: str, query: str, ignore_case: bool = False) -> boo
 
 @pytest.fixture(scope="module")
 def archive(spark):
-    enc = encode_batch(pd.Series(CORPUS, dtype=object))
-    logtypes = sorted(set(enc["logtype"]))
+    enc = [encode_message(m) for m in CORPUS]
+    logtypes = sorted({e.logtype for e in enc})
     lt_id = {lt: i for i, lt in enumerate(logtypes)}
-    var_values = sorted({v for dv in enc["dict_vars"] for v in dv})
+    var_values = sorted({v for e in enc for v in e.dict_vars})
 
     sinks_schema = StructType(
         [
@@ -83,13 +82,13 @@ def archive(spark):
         (
             f"doc-{i:04d}",
             "app-0",
-            lt_id[enc["logtype"][i]],
-            enc["logtype"][i],
-            list(enc["placeholders"][i]),
-            list(enc["encoded_vars"][i]),
-            list(enc["dict_vars"][i]),
+            lt_id[e.logtype],
+            e.logtype,
+            e.placeholders,
+            e.encoded_vars,
+            e.dict_vars,
         )
-        for i in range(len(CORPUS))
+        for i, e in enumerate(enc)
     ]
     sinks = spark.createDataFrame(rows, sinks_schema)
     logtype_dict = spark.createDataFrame(

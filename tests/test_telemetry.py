@@ -370,6 +370,28 @@ class TestSearchLifecycle:
         # one batched POST for the whole fleet, never one per archive
         assert len(collector.payloads) == 1
 
+    def test_federated_parse_error_is_not_masked(
+        self, collector, monkeypatch, capsys, spark, tmp_path
+    ):
+        """A query that never parses raises its own parse error, alone: the
+        telemetry export in `finally` must not parse the query again and
+        raise a second error over the first."""
+        from clp_spark import cli
+
+        root = tmp_path / "fleet"
+        root.mkdir()
+        src = tmp_path / "in.jsonl"
+        src.write_text('{"m": 1}\n')
+        cli.main(["c", str(root / "a0"), str(src), "--json"])
+        capsys.readouterr()
+        monkeypatch.setenv("CLP_TELEMETRY_ENDPOINT",
+                           f"http://127.0.0.1:{collector.port}")
+        with pytest.raises(ValueError, match="KQL lex error") as err:
+            cli.main(["s-kql", str(root), 'm: "unterminated',
+                      "--enable-telemetry"])
+        assert err.value.__context__ is None
+        assert err.value.__cause__ is None
+
     def test_without_flag_no_span(
         self, collector, monkeypatch, telemetry_archive, capsys, spark
     ):
