@@ -558,8 +558,7 @@ def run_glt_bench(cpus: int) -> None:
 
     import pyspark.sql.functions as F
 
-    from clp_spark.operators.glt import search_glt_archive
-    from clp_spark.operators.search import search_archive
+    from clp_spark.operators.search import search_archive, search_archive_dir
     from clp_spark.sources.logfiles import compress_text_logs
 
     spark = make_spark(cpus)
@@ -618,7 +617,7 @@ def run_glt_bench(cpus: int) -> None:
         # delta the layout exists to remove — the scan figure is what
         # scales with archive size.
         t0 = time.monotonic()
-        res_p, tables = search_glt_archive(spark, glt_dir, query)
+        res_p, tables = search_archive_dir(spark, glt_dir, query)
         n_pruned = res_p.count()
         e2e_p = time.monotonic() - t0
         t0 = time.monotonic()

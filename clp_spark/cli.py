@@ -22,6 +22,8 @@ import json
 import os
 import sys
 import time
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -606,29 +608,26 @@ def _file_path_pred(col, path: str):
     return (col == F.lit(path)) | (col_norm == F.lit(norm))
 
 
-def _emit_search_results(res, args, ts_lookup=None) -> None:
+def _emit_search_results(res, args) -> None:
     """Final result emission for `s` — the clg output methods
     (clg CommandLineArguments.cpp:67-74): 's' prints each decompressed
     message (print_result_text), 'b' writes the reference's binary framing
     to stdout: <u64 path-len><path bytes><i64 ts-ms><u64 logtype-id>
     <u64 msg-len><msg bytes>, little-endian (clg.cpp:420-470
-    print_result_binary). ``ts_lookup`` (doc_id → ts_ms) supplies the
-    timestamp field when the result set doesn't carry one; results with no
-    stored timestamp write 0."""
+    print_result_binary). The timestamp field is the result's ts_ms;
+    results with no stored timestamp write 0."""
     out = res
     if getattr(args, "max_num_results", None):
         # clo -m/--max-num-results (OutputHandler.hpp latest-N min-heap):
         # keep the n results with the largest timestamps —
         # TakeOrderedAndProject, no full sort
-        if "ts_ms" not in out.columns and ts_lookup is not None:
-            out = out.join(ts_lookup, "doc_id", "left")
         if "ts_ms" in out.columns:
             out = out.orderBy(F.desc_nulls_last("ts_ms"))
         out = out.limit(args.max_num_results)
     if args.limit is not None:
         out = out.limit(args.limit)
     if getattr(args, "output_handler", "stdout") == "network":
-        _send_results_network(out, args, ts_lookup)
+        _send_results_network(out, args)
         return
     if getattr(args, "output_method", "s") != "b":
         for r in out.collect():
@@ -636,8 +635,6 @@ def _emit_search_results(res, args, ts_lookup=None) -> None:
         return
     import struct
 
-    if "ts_ms" not in out.columns and ts_lookup is not None:
-        out = out.join(ts_lookup, "doc_id", "left")
     has_ts = "ts_ms" in out.columns
     has_lt = "logtype_id" in out.columns
     buf = sys.stdout.buffer
@@ -655,7 +652,7 @@ def _emit_search_results(res, args, ts_lookup=None) -> None:
     buf.flush()
 
 
-def _send_results_network(out, args, ts_lookup=None) -> None:
+def _send_results_network(out, args) -> None:
     """clo's network output handler (clo/OutputHandler.hpp:68-115,
     OutputHandler.cpp:20-44): connect to host:port and send each result as
     one msgpack tuple (ts_ms, message, orig_file_path, orig_file_id,
@@ -667,8 +664,6 @@ def _send_results_network(out, args, ts_lookup=None) -> None:
 
     from clp_spark.sinks.single_file_archive import msgpack_pack
 
-    if "ts_ms" not in out.columns and ts_lookup is not None:
-        out = out.join(ts_lookup, "doc_id", "left")
     has_ts = "ts_ms" in out.columns
     has_doc = "doc_id" in out.columns
     with socket.create_connection((args.host, args.port)) as sk:
@@ -726,10 +721,6 @@ def _union_query_results(run, queries):
 
 def cmd_search(args) -> None:
     from clp_spark.operators.aggregate import count_by_time, count_matched
-    from clp_spark.operators.seg_index import search_archive_pruned
-    from clp_spark.operators.search import search_archive
-
-    import os as _os
 
     if args.count_by_time is not None and args.count_by_time <= 0:
         sys.exit("error: --count-by-time needs a positive bucket size in ms")
@@ -796,170 +787,63 @@ def cmd_search(args) -> None:
     # archives DIRECTORY (clg semantics: search every archive, time-pruned)
     # vs a single archive dir — detected by where sinks/ lives
     local_root = args.archive.removeprefix("file:")
-    if "://" not in args.archive or args.archive.startswith("file:"):
-        import os as _os2
-
-        if not _os2.path.isdir(_os2.path.join(local_root, "sinks")):
-            from clp_spark.operators.federation import (
-                discover_archives,
-                search_archives,
-            )
-
-            if not discover_archives(local_root):
-                sys.exit(f"error: {args.archive} contains no archives")
-            res = _union_query_results(
-                lambda q: search_archives(
-                    spark, local_root, q, args.ignore_case,
-                    ts_lo=args.tge, ts_hi=args.tle,
-                ),
-                queries,
-            )
-            if args.file_path:
-                # clg --file-path: only messages from one original file
-                res = res.where(_file_path_pred(F.col("source"), args.file_path))
-            if args.count:
-                if args.output_handler == "reducer":
-                    _send_reducer_count(res, args)
-                else:
-                    print(count_matched(res).collect()[0]["cnt"])
-            elif args.count_by_time is not None:
-                cbt = res.where(F.col("ts_ms").isNotNull())
-                if args.output_handler == "reducer":
-                    _send_reducer_count_by_time(cbt, "ts_ms", args)
-                else:
-                    rows = count_by_time(
-                        cbt, F.col("ts_ms"), args.count_by_time,
-                    ).orderBy("bucket_ts").collect()
-                    for r in rows:
-                        print(r["bucket_ts"], r["cnt"])
-            else:
-                _emit_search_results(res, args)
-            return
-    # one sinks read, reused for the columns probe / search input / ts join
-    raw_sinks = spark.read.option("basePath", f"{args.archive}/sinks").parquet(
-        f"{args.archive}/sinks"
-    )
-    if args.file_path:
-        # clg --file-path: partition-prunes the scan (sinks partition on
-        # file_id), so only that file's segments are read at all
-        if "file_id" not in raw_sinks.columns:
-            sys.exit("error: --file-path needs a text-log archive")
-        raw_sinks = raw_sinks.where(
-            _file_path_pred(F.col("file_id"), args.file_path)
-        )
-    # --tge/--tle in single-archive mode: per-message timestamp filter
-    # (archives-dir mode handled above via catalog pruning + pushdown)
-    want_ts = args.tge is not None or args.tle is not None
-    if want_ts and "ts_ms" not in raw_sinks.columns:
-        sys.exit(
-            "error: --tge/--tle need an archive with per-message timestamps "
-            "(text-log archives carry ts_ms; token-pipeline archives do not)"
-        )
-
-    def _ts_filter(df):
-        if args.tge is not None:
-            df = df.where(F.col("ts_ms") >= F.lit(args.tge))
-        if args.tle is not None:
-            df = df.where(F.col("ts_ms") <= F.lit(args.tle))
-        return df
-    # the segment index lives next to local archives; remote (hadoop-fs)
-    # archives skip the local-path probe and run unpruned rather than crash
     is_local = "://" not in args.archive or args.archive.startswith("file:")
-    has_index = is_local and _os.path.exists(
-        args.archive.removeprefix("file:") + "/seg_index"
-    )
-    from clp_spark.operators.glt import is_glt_archive, search_glt_archive
-    from clp_spark.operators.schema_archive import (
-        archive_schema_text,
-        search_schema_archive,
-    )
+    if is_local and not os.path.isdir(os.path.join(local_root, "sinks")):
+        from clp_spark.operators.federation import (
+            discover_archives,
+            search_archives,
+        )
 
-    if is_local and archive_schema_text(args.archive) is not None:
-        # archive built with `c --schema-path`: compile schema-aware
-        # (use_heuristic=false) against the stored schema file
+        if not discover_archives(local_root):
+            sys.exit(f"error: {args.archive} contains no archives")
         res = _union_query_results(
-            lambda q: search_schema_archive(
-                spark, args.archive, q, args.ignore_case
+            lambda q: search_archives(
+                spark, local_root, q, args.ignore_case,
+                ts_lo=args.tge, ts_hi=args.tle,
             ),
             queries,
         )
         if args.file_path:
+            # clg --file-path: only messages from one original file
             res = res.where(_file_path_pred(F.col("source"), args.file_path))
-        if want_ts:
-            res = res.join(
-                raw_sinks.select(
-                    F.concat_ws("#", "file_id", "msg_ix").alias("doc_id"),
-                    "ts_ms",
-                ),
-                "doc_id",
-            ).transform(_ts_filter).drop("ts_ms")
-    elif is_local and is_glt_archive(local_root):
-        # GLT archive: candidate logtypes prune to their tables (partition
-        # filter on lt_table) before any segment I/O — the glt.md:7 path
-        res = _union_query_results(
-            lambda q: search_glt_archive(
-                spark, args.archive, q, args.ignore_case
-            )[0],
-            queries,
-        )
-        if args.file_path:
-            res = res.where(_file_path_pred(F.col("source"), args.file_path))
-        if want_ts:
-            res = res.join(
-                raw_sinks.select(
-                    F.concat_ws("#", "file_id", "msg_ix").alias("doc_id"),
-                    "ts_ms",
-                ),
-                "doc_id",
-            ).transform(_ts_filter).drop("ts_ms")
-    elif has_index and "split" in raw_sinks.columns:
-        res = _union_query_results(
-            lambda q: search_archive_pruned(
-                spark, args.archive, q, args.ignore_case
-            )[0],
-            queries,
-        )
-        if want_ts:
-            # pruned-path results carry ts_ms when the archive stores it
-            res = _ts_filter(res) if "ts_ms" in res.columns else res.join(
-                raw_sinks.select(
-                    F.concat_ws("#", "file_id", "msg_ix").alias("doc_id"),
-                    "ts_ms",
-                ),
-                "doc_id",
-            ).transform(_ts_filter).drop("ts_ms")
     else:
-        sinks = raw_sinks
-        if want_ts:
-            sinks = _ts_filter(sinks)  # pushed to the scan — prune first
-        if "doc_id" not in sinks.columns:  # text-log archives key by file/msg
-            sinks = sinks.withColumn(
-                "doc_id", F.concat_ws("#", "file_id", "msg_ix")
-            ).withColumn("source", F.col("file_id"))
-        lt = spark.read.parquet(f"{args.archive}/logtype_dict")
-        vd = spark.read.parquet(f"{args.archive}/var_dict")
-        res = _union_query_results(
-            lambda q: search_archive(sinks, lt, vd, q, args.ignore_case),
-            queries,
-        )
+        from pyspark.errors import AnalysisException
+
+        from clp_spark.operators.search import search_archive_dir
+
+        # --file-path / --tge / --tle filter the encoded rows before the
+        # decode; sinks partition on file_id, so --file-path prunes the scan
+        conds = []
+        if args.file_path:
+            conds.append(_file_path_pred(F.col("file_id"), args.file_path))
+        if args.tge is not None:
+            conds.append(F.col("ts_ms") >= F.lit(args.tge))
+        if args.tle is not None:
+            conds.append(F.col("ts_ms") <= F.lit(args.tle))
+        try:
+            res = search_archive_dir(
+                spark, args.archive, queries, args.ignore_case,
+                where=reduce(and_, conds) if conds else None,
+            )[0]
+        except AnalysisException:
+            if not conds:
+                raise
+            sys.exit("error: --file-path and --tge/--tle need a text-log "
+                     "archive (it carries file ids and per-message "
+                     "timestamps; token-pipeline archives do not)")
     if args.count:
         if args.output_handler == "reducer":
             _send_reducer_count(res, args)
         else:
             print(count_matched(res).collect()[0]["cnt"])
     elif args.count_by_time is not None:
-        if "ts_ms" not in raw_sinks.columns:
+        if "ts_ms" not in res.columns:
             sys.exit(
                 "error: --count-by-time needs an archive with per-message "
                 "timestamps (text-log archives carry ts_ms; token-pipeline "
                 "archives do not)"
             )
-        cbt = res.join(
-            raw_sinks.select(
-                F.concat_ws("#", "file_id", "msg_ix").alias("doc_id"), "ts_ms"
-            ),
-            "doc_id",
-        )
+        cbt = res.where(F.col("ts_ms").isNotNull())
         if args.output_handler == "reducer":
             _send_reducer_count_by_time(cbt, "ts_ms", args)
         else:
@@ -969,17 +853,7 @@ def cmd_search(args) -> None:
             for r in rows:
                 print(r["bucket_ts"], r["cnt"])
     else:
-        ts_lookup = None
-        if "ts_ms" in raw_sinks.columns:
-            ts_lookup = (
-                raw_sinks.select("doc_id", "ts_ms")
-                if "doc_id" in raw_sinks.columns
-                else raw_sinks.select(
-                    F.concat_ws("#", "file_id", "msg_ix").alias("doc_id"),
-                    "ts_ms",
-                )
-            )
-        _emit_search_results(res, args, ts_lookup)
+        _emit_search_results(res, args)
 
 
 def _emit_federated_telemetry(
@@ -1287,6 +1161,21 @@ def _emit_kql_results(out, col: str, args, archive_id: str = "",
             sk.sendall(_tuple_bytes(r))
 
 
+def _kql_output(res, col: str, args, ts_key: str | None,
+                ts_pats=None, archive_id: str = "") -> None:
+    """The one `s-kql` result tail: an aggregate flag, or latest-N →
+    projection → limit → the output handler."""
+    if _kql_aggregate(res, col, args, ts_pats):
+        return
+    if args.max_num_results is not None:
+        res = _latest_n(res, col, ts_key, args.max_num_results, ts_pats)
+    if args.projection:
+        res = _apply_projection(res, col, args.projection)
+    if args.limit is not None:
+        res = res.limit(args.limit)
+    _emit_kql_results(res, col, args, archive_id=archive_id, ts_key=ts_key)
+
+
 def _kv_ir_stream_paths(input_path: str) -> list[str]:
     """Inputs that ARE raw kv-IR streams (a .clp/.clp.zst file, or a
     directory of them) — the clp-s `s` routing check
@@ -1351,14 +1240,7 @@ def _search_kv_ir_streams(spark, paths: list[str], args) -> None:
         recs = kv_ir_to_json_df(matched).join(
             keys, ["stream", "chunk_ix", "event_ix"]
         )
-        if args.max_num_results is not None:
-            recs = _latest_n(
-                recs, "json", args.timestamp_key, args.max_num_results
-            )
-        if args.projection:
-            recs = _apply_projection(recs, "json", args.projection)
-        out = recs.limit(args.limit) if args.limit is not None else recs
-        _emit_kql_results(out, "json", args, ts_key=args.timestamp_key)
+        _kql_output(recs, "json", args, args.timestamp_key)
     finally:
         keys.unpersist()
 
@@ -1443,15 +1325,7 @@ def cmd_search_kql(args) -> None:
                 tge=args.tge, tle=args.tle,
                 telemetry_sink=t_sink,
             )
-            if not _kql_aggregate(res, "json", args, ts_pats):
-                if args.max_num_results is not None:
-                    res = _latest_n(res, "json", ts_key,
-                                    args.max_num_results, ts_pats)
-                if args.projection:
-                    res = _apply_projection(res, "json", args.projection)
-                out = (res.limit(args.limit) if args.limit is not None
-                       else res)
-                _emit_kql_results(out, "json", args, ts_key=ts_key)
+            _kql_output(res, "json", args, ts_key, ts_pats)
         except BaseException as exc:
             t_err = str(exc)
             raise
@@ -1533,23 +1407,10 @@ def cmd_search_kql(args) -> None:
                 )
                 span.set_termination_stage(tinfo["termination_stage"])
                 res = res.drop("__sid__")
-            if not _kql_aggregate(res, "json", args, ts_pats):
-                if args.max_num_results is not None:
-                    res = _latest_n(
-                        res, "json", args.timestamp_key,
-                        args.max_num_results, ts_pats,
-                    )
-                if args.projection:
-                    res = _apply_projection(res, "json", args.projection)
-                out = (res.limit(args.limit) if args.limit is not None
-                       else res)
-                _emit_kql_results(
-                    out, "json", args,
-                    archive_id=os.path.basename(
-                        os.path.normpath(args.input)
-                    ),
-                    ts_key=args.timestamp_key,
-                )
+            _kql_output(
+                res, "json", args, args.timestamp_key, ts_pats,
+                archive_id=os.path.basename(os.path.normpath(args.input)),
+            )
         except BaseException as exc:
             if span is not None:
                 span.set_error(str(exc))
@@ -1570,15 +1431,7 @@ def cmd_search_kql(args) -> None:
         structurize_arrays=args.structurize_arrays,
         timestamp_key=args.timestamp_key,
     )
-    if not _kql_aggregate(res, "raw", args):
-        if args.max_num_results is not None:
-            res = _latest_n(
-                res, "raw", args.timestamp_key, args.max_num_results
-            )
-        if args.projection:
-            res = _apply_projection(res, "raw", args.projection)
-        out = res.limit(args.limit) if args.limit is not None else res
-        _emit_kql_results(out, "raw", args, ts_key=args.timestamp_key)
+    _kql_output(res, "raw", args, args.timestamp_key)
 
 
 def cmd_kv_import(args) -> None:
@@ -2001,7 +1854,12 @@ def cmd_reducer_server(args) -> None:
             server.close()
         if args.one_job:
             sys.exit(0 if ok else 1)
-        if not ok:
+        if server.unrecoverable:
+            # a failed registration (nothing to serve: the loop would
+            # spin) or a results-cache write failure
+            # (ServerContext.cpp:250-256 UnrecoverableFailure); a bad job
+            # config or a scheduler stream closing mid-job fails only
+            # that job, and the loop registers for the next one
             sys.exit(1)
 
 

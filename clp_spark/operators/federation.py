@@ -341,9 +341,6 @@ def _execute_compiled(
         )
         return df.select(*_KEEP, "message")
 
-    def _with_logtype(df: DataFrame) -> DataFrame:
-        return df.join(F.broadcast(lt_u), ["archive_id", "logtype_id"], "left")
-
     keep = _KEEP + ["ts_pat"]
     if subs == MATCH_ALL:
         sinks_u = _ts_filter(
@@ -351,10 +348,8 @@ def _execute_compiled(
                 DataFrame.unionByName,
                 [_normalized_sinks(spark, aid, p) for aid, p in archives],
             )
-        )
-        return _finish(
-            verify_candidates(sinks_u, MATCH_ALL, keep, query, ignore_case, _with_logtype)
-        )
+        ).join(F.broadcast(lt_u), ["archive_id", "logtype_id"], "left")
+        return _finish(verify_candidates(sinks_u, MATCH_ALL, keep, query, ignore_case))
 
     # candidate (archive_id, logtype_id) -> matching subquery set, resolved
     # entirely as DataFrame ops (no driver id collects, no isin cap)
@@ -367,17 +362,19 @@ def _execute_compiled(
         )
         cand_parts.append(
             lt_u.where(like).select(
-                "archive_id", "logtype_id", F.lit(k).alias("_k")
+                "archive_id", "logtype_id", "logtype", F.lit(k).alias("_k")
             )
         )
-    # localCheckpoint, not persist: the candidate table is consumed by the
-    # segment-hit collect AND the later broadcast join; persist() would park
-    # it in the CacheManager forever (one leaked cache entry per federated
-    # query in a long-lived session), while a localCheckpoint's blocks are
-    # released by the ContextCleaner once the result DataFrame is dropped
+    # the table carries each candidate's logtype string, so the decode reads
+    # the dictionaries through this one scan. localCheckpoint, not persist:
+    # the candidate table is consumed by the segment-hit collect AND the
+    # later broadcast join; persist() would park it in the CacheManager
+    # forever (one leaked cache entry per federated query in a long-lived
+    # session), while a localCheckpoint's blocks are released by the
+    # ContextCleaner once the result DataFrame is dropped
     cands = (
         reduce(DataFrame.unionByName, cand_parts)
-        .groupBy("archive_id", "logtype_id")
+        .groupBy("archive_id", "logtype_id", "logtype")
         .agg(F.collect_set("_k").alias("_ks"))
         .localCheckpoint(eager=True)
     )
@@ -401,6 +398,4 @@ def _execute_compiled(
     # subquery k's base predicate: its logtype pattern matched the row's
     # (archive_id, logtype_id)
     bases = [(F.array_contains(F.col("_ks"), k), sq) for k, sq in enumerate(subs)]
-    return _finish(
-        verify_candidates(joined, bases, keep, query, ignore_case, _with_logtype)
-    )
+    return _finish(verify_candidates(joined, bases, keep, query, ignore_case))

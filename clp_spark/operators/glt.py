@@ -28,7 +28,7 @@ import hashlib
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 GLT_MANIFEST = "_glt_manifest.json"
@@ -82,28 +82,21 @@ def is_glt_archive(archive_dir: str) -> bool:
 
 
 def glt_sinks_pruned(
-    spark: SparkSession,
-    archive_dir: str,
+    sinks: DataFrame,
+    manifest: dict,
     logtype_dict: DataFrame,
-    compiled,
+    ids: list | None,
 ) -> tuple[DataFrame, list[str] | None]:
-    """Scan of a GLT archive's sinks restricted to the logtype tables the
-    compiled query can match. Returns (sinks, pruned_table_list); the list
-    is None when the query has no id constraint (full scan).
+    """A GLT archive's sinks scan restricted to the logtype tables that the
+    candidate logtype ``ids`` (`search.candidate_logtype_ids`; None = no
+    id constraint) can live in. Returns (sinks, pruned_table_list); the
+    list is None when the scan stays whole.
 
     The candidate-id → table-name mapping is a bounded driver probe on the
     logtype dictionary (same bound as query compilation's own dictionary
     probes); each candidate contributes its hot name AND its combined
     bucket — a logtype lives in exactly one of the two, so the union is
     sound without recording route-time hotness per logtype."""
-    from clp_spark.operators.search import candidate_logtype_ids
-
-    manifest = read_glt_manifest(archive_dir)
-    if manifest is None:
-        raise ValueError(f"{archive_dir} is not a GLT archive")
-    sinks_dir = f"{archive_dir}/sinks"
-    sinks = spark.read.option("basePath", sinks_dir).parquet(sinks_dir)
-    ids = candidate_logtype_ids(compiled)
     if ids is None or len(ids) > MAX_PRUNE_LOGTYPES:
         return sinks, None
     if not ids:
@@ -120,28 +113,3 @@ def glt_sinks_pruned(
         | {glt_table_name(r["logtype"], nb, hot=False) for r in cands}
     )
     return sinks.where(F.col("lt_table").isin(tables)), tables
-
-
-def search_glt_archive(
-    spark: SparkSession,
-    archive_dir: str,
-    query: str,
-    ignore_case: bool = False,
-) -> tuple[DataFrame, list[str] | None]:
-    """Wildcard search over a GLT-layout archive with logtype-table pruning
-    (the GLT fast path). Parity: identical result set to search_archive
-    over an unpruned scan (tests/test_glt.py differential)."""
-    from clp_spark.operators.search import compile_query, search_archive
-    from clp_spark.operators.seg_index import _cached_dicts
-
-    logtype_dict, var_dict = _cached_dicts(spark, archive_dir)
-    compiled = compile_query(query, logtype_dict, var_dict, ignore_case)
-    sinks, tables = glt_sinks_pruned(spark, archive_dir, logtype_dict, compiled)
-    if "doc_id" not in sinks.columns:
-        sinks = sinks.withColumn(
-            "doc_id", F.concat_ws("#", "file_id", "msg_ix")
-        ).withColumn("source", F.col("file_id"))
-    res = search_archive(
-        sinks, logtype_dict, var_dict, query, ignore_case, compiled=compiled
-    )
-    return res, tables

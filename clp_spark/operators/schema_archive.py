@@ -582,29 +582,3 @@ def compile_schema_query(
     if subqueries == MATCH_ALL:
         return MATCH_ALL
     return resolve_logtype_ids(subqueries, logtype_dict, ignore_case)
-
-
-def search_schema_archive(
-    spark: SparkSession,
-    archive_dir: str,
-    query: str,
-    ignore_case: bool = False,
-) -> DataFrame:
-    """Full wildcard-search lifecycle over a schema archive: load the stored
-    schema, compile schema-aware, execute with the shared executor."""
-    from clp_spark.operators.search import search_archive
-
-    text = archive_schema_text(archive_dir)
-    if text is None:
-        raise SchemaFileError(f"{archive_dir} has no {SCHEMA_FILE_NAME}")
-    sf = load_log_schema(text)
-    sinks = (
-        spark.read.option("basePath", f"{archive_dir}/sinks")
-        .parquet(f"{archive_dir}/sinks")
-        .withColumn("doc_id", F.concat_ws("#", "file_id", "msg_ix"))
-        .withColumn("source", F.col("file_id"))
-    )
-    lt = spark.read.parquet(f"{archive_dir}/logtype_dict")
-    vd = spark.read.parquet(f"{archive_dir}/var_dict")
-    compiled = compile_schema_query(query, lt, vd, sf, ignore_case)
-    return search_archive(sinks, lt, vd, query, ignore_case, compiled=compiled)

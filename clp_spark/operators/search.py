@@ -587,7 +587,6 @@ def verify_candidates(
     keep: list[str],
     query: str,
     ignore_case: bool,
-    attach_logtype=lambda df: df,
 ) -> DataFrame:
     """The candidate → decode → verify tail shared by every text search.
 
@@ -597,13 +596,13 @@ def verify_candidates(
     rows matching any subquery decode (keeping ``keep``) and re-verify
     against the whole query unless an exact subquery (no
     wildcard_match_required) already proves the match. MATCH_ALL decodes
-    every row and verifies each. ``attach_logtype`` adds the ``logtype``
-    column right before the decode."""
+    every row and verifies each. ``rows`` must carry the ``logtype``
+    column the decode reads."""
     if subqueries == MATCH_ALL:
         # no subquery can narrow the scan (reference: SupercedesAllSubQueries)
         # → full scan, decode (mapInArrow numpy kernel — no per-row Python),
         # and verify the original query per message
-        decoded = decode_df(attach_logtype(rows), keep)
+        decoded = decode_df(rows, keep)
         return decoded.where(wildcard_match(F.col("message"), query, ignore_case))
 
     tagged = tagged_vars_col()
@@ -621,8 +620,8 @@ def verify_candidates(
 
     # the exact-subquery flag is computed on the encoded columns BEFORE the
     # decode stage drops them, then carried through mapInArrow as a column
-    candidates = attach_logtype(
-        rows.where(reduce(or_, candidate_preds)).withColumn("_no_verify", no_verify)
+    candidates = rows.where(reduce(or_, candidate_preds)).withColumn(
+        "_no_verify", no_verify
     )
     decoded = decode_df(candidates, keep + ["_no_verify"])
     final = F.col("_no_verify") | wildcard_match(F.col("message"), query, ignore_case)
@@ -637,26 +636,30 @@ def search_archive(
     ignore_case: bool = False,
     compiled=None,
 ) -> DataFrame:
-    """Matched rows (doc_id, source, logtype_id, message) for a CLP wildcard
-    query. Pass ``compiled`` (a compile_query result) to reuse an existing
-    compilation — e.g. after segment pruning already probed the dictionaries."""
-    # archives carrying per-message timestamp patterns (text-log archives)
-    # get the timestamp text re-rendered into matched messages — clg prints
-    # the full original line; the wildcard MATCHES the stored body (the
-    # reference's logtype excludes the timestamp), so restore runs after
-    # the verify and never changes which rows match
-    has_ts = "ts_pat" in sinks.columns and "ts_ms" in sinks.columns
-    keep = ["doc_id", "source", "logtype_id"] + (["ts_ms", "ts_pat"] if has_ts else [])
+    """Matched rows (doc_id, source, logtype_id, message[, ts_ms]) for a CLP
+    wildcard query; ts_ms comes along whenever the sinks carry it. Pass
+    ``compiled`` (a compile_query result) to reuse an existing compilation
+    — e.g. after segment pruning already probed the dictionaries."""
+    # text-log archives carry each message's timestamp: it rides along in
+    # the result (count-by-time, latest-N and the binary/network outputs
+    # read it there) and, with a stored pattern, is re-rendered into the
+    # matched message — clg prints the full original line; the wildcard
+    # MATCHES the stored body (the reference's logtype excludes the
+    # timestamp), so restore runs after the verify and never changes which
+    # rows match
+    ts = ["ts_ms"] if "ts_ms" in sinks.columns else []
+    has_pat = bool(ts) and "ts_pat" in sinks.columns
+    keep = ["doc_id", "source", "logtype_id"] + ts + (["ts_pat"] if has_pat else [])
 
     def _finish(df: DataFrame) -> DataFrame:
-        if has_ts:
+        if has_pat:
             from clp_spark.functions.timestamps import restore_timestamp
 
             df = df.withColumn(
                 "message",
                 restore_timestamp(F.col("message"), F.col("ts_ms"), F.col("ts_pat")),
             )
-        return df.select("doc_id", "source", "logtype_id", "message")
+        return df.select("doc_id", "source", "logtype_id", "message", *ts)
 
     with_lt = sinks.join(F.broadcast(logtype_dict.select("logtype_id", "logtype")),
                          "logtype_id", "left") if "logtype" not in sinks.columns else sinks
@@ -669,3 +672,78 @@ def search_archive(
         (_ids_predicate(F.col("logtype_id"), ids), sq) for ids, sq in compiled
     ]
     return _finish(verify_candidates(with_lt, subqueries, keep, query, ignore_case))
+
+
+def search_archive_dir(
+    spark,
+    archive_dir: str,
+    query: str | list[str],
+    ignore_case: bool = False,
+    where: Column | None = None,
+) -> tuple[DataFrame, list | None]:
+    """The whole single-archive search over an on-disk archive: read the
+    dictionaries and sinks once, compile (schema-aware when the archive
+    stores a schema file), narrow the scan, then run `search_archive`.
+    ``query`` is one wildcard query or a list of them OR'd together (clg
+    -f: a message matching several is returned once).
+
+    The scan is narrowed by the GLT logtype tables (`lt_table` partition
+    filter) on GLT archives, by the segment index (only the candidate
+    `split=` directories are listed) when one exists, and not at all
+    otherwise; only local archives are probed for either. ``where`` is a
+    predicate on the encoded sink columns (file and time filters), applied
+    before the decode. Returns (results, scanned segment ids or GLT table
+    names — None when the scan was not narrowed)."""
+    import os
+
+    from clp_spark.operators.glt import glt_sinks_pruned, read_glt_manifest
+    from clp_spark.operators.schema_archive import (
+        archive_schema_text,
+        compile_schema_query,
+        load_log_schema,
+    )
+    from clp_spark.operators.seg_index import matching_segments
+
+    queries = [query] if isinstance(query, str) else list(query)
+    lt = spark.read.parquet(f"{archive_dir}/logtype_dict")
+    vd = spark.read.parquet(f"{archive_dir}/var_dict")
+    schema = archive_schema_text(archive_dir)
+    if schema is not None:
+        sf = load_log_schema(schema)
+        compiled = [compile_schema_query(q, lt, vd, sf, ignore_case) for q in queries]
+    else:
+        compiled = [compile_query(q, lt, vd, ignore_case) for q in queries]
+    ids: list | None = []
+    for c in compiled:
+        c_ids = candidate_logtype_ids(c)
+        ids = None if ids is None or c_ids is None else sorted({*ids, *c_ids})
+
+    local = "://" not in archive_dir or archive_dir.startswith("file:")
+    root = archive_dir.removeprefix("file:")
+    sinks_dir = f"{archive_dir}/sinks"
+    sinks = spark.read.option("basePath", sinks_dir).parquet(sinks_dir)
+    manifest = read_glt_manifest(archive_dir) if local else None
+    pruned = None
+    if manifest is not None:
+        sinks, pruned = glt_sinks_pruned(sinks, manifest, lt, ids)
+    elif local and os.path.exists(f"{root}/seg_index") and "split" in sinks.columns:
+        pruned = matching_segments(spark.read.parquet(f"{archive_dir}/seg_index"), ids)
+        if pruned:
+            sinks = spark.read.option("basePath", sinks_dir).parquet(
+                *[os.path.join(sinks_dir, f"split={s}") for s in pruned]
+            )
+        elif pruned == []:
+            sinks = sinks.where(F.lit(False))
+    if where is not None:
+        sinks = sinks.where(where)
+    if "doc_id" not in sinks.columns:  # text-log archives key by file/msg
+        sinks = sinks.withColumn(
+            "doc_id", F.concat_ws("#", "file_id", "msg_ix")
+        ).withColumn("source", F.col("file_id"))
+    res = reduce(DataFrame.unionByName, [
+        search_archive(sinks, lt, vd, q, ignore_case, compiled=c)
+        for q, c in zip(queries, compiled)
+    ])
+    if len(queries) > 1:
+        res = res.dropDuplicates(["doc_id"])
+    return res, pruned

@@ -15,74 +15,14 @@ opened (stronger than row-group min/max stats, which require touching every
 footer; at 10^6 files that difference is the query latency).
 
 A query with no id constraint (MATCH_ALL, or a probe past the isin cap)
-reads all segments — same superset semantics as the row filter.
+reads all segments — same superset semantics as the row filter. The search
+itself is `operators.search.search_archive_dir`.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from clp_spark.operators.search import (
-    MATCH_ALL,
-    candidate_logtype_ids,
-    compile_query,
-    search_archive,
-)
-
-
-_DICT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
-def _dict_cache_key(spark: SparkSession, out_dir: str) -> tuple:
-    """Key includes the Spark application id (a cached DataFrame dies with
-    its session) and the dictionary directories' mtimes (a re-encode/append
-    rewrites them → stale cache entries must miss, not serve old ids)."""
-
-    def mt(p: str) -> float:
-        try:
-            return os.path.getmtime(p)
-        except OSError:
-            return 0.0
-
-    return (
-        spark.sparkContext.applicationId,
-        out_dir,
-        mt(f"{out_dir}/logtype_dict"),
-        mt(f"{out_dir}/var_dict"),
-    )
-
-
-def _cached_dicts(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = _dict_cache_key(spark, out_dir)
-    if key not in _DICT_CACHE:
-        # drop superseded entries for the same archive (old session or old
-        # dictionary version) so the cache never accumulates dead copies
-        for k in [k for k in _DICT_CACHE if k[1] == out_dir and k != key]:
-            lt, vd = _DICT_CACHE.pop(k)
-            try:
-                lt.unpersist()
-                vd.unpersist()
-            except Exception:
-                pass  # the owning session may already be stopped
-        _DICT_CACHE[key] = (
-            spark.read.parquet(f"{out_dir}/logtype_dict").persist(),
-            spark.read.parquet(f"{out_dir}/var_dict").persist(),
-        )
-    return _DICT_CACHE[key]
-
-
-def clear_dict_cache() -> None:
-    """Unpersist and forget all memoized archive dictionaries."""
-    for lt, vd in _DICT_CACHE.values():
-        try:
-            lt.unpersist()
-            vd.unpersist()
-        except Exception:
-            pass
-    _DICT_CACHE.clear()
 
 
 def build_segment_index(spark: SparkSession, sinks_dir: str) -> DataFrame:
@@ -118,47 +58,3 @@ def matching_segments(
         .collect()
     )
     return sorted(r["segment"] for r in rows)
-
-
-def search_archive_pruned(
-    spark: SparkSession,
-    out_dir: str,
-    query: str,
-    ignore_case: bool = False,
-) -> tuple[DataFrame, list[int] | None]:
-    """Full pruned search over an on-disk archive: compile once (dictionary
-    probes), prune segments via the index, scan only surviving split dirs,
-    then run the standard candidate-filter → decode → verify execution.
-
-    Returns (results, pruned_segment_list); the segment list is None when the
-    query could not be pruned (no id constraint).
-
-    The dictionaries are persisted before compilation — CLP loads its
-    dictionaries into memory once per archive (DictionaryReader); query
-    compilation runs several probe scans against them, so keeping them
-    cached turns each probe into an in-memory scan instead of a parquet
-    re-read. The cache is memoized per archive path (repeated queries reuse
-    ONE cached copy rather than stacking a new persist per call); drop it
-    with clear_dict_cache()."""
-    logtype_dict, var_dict = _cached_dicts(spark, out_dir)
-    seg_index = spark.read.parquet(f"{out_dir}/seg_index")
-
-    compiled = compile_query(query, logtype_dict, var_dict, ignore_case)
-    ids = candidate_logtype_ids(compiled)
-    segments = matching_segments(seg_index, ids)
-
-    sinks_dir = f"{out_dir}/sinks"
-    if segments is None:
-        sinks = spark.read.option("basePath", sinks_dir).parquet(sinks_dir)
-    elif not segments:
-        sinks = spark.read.option("basePath", sinks_dir).parquet(sinks_dir).where(
-            F.lit(False)
-        )
-    else:
-        paths = [os.path.join(sinks_dir, f"split={s}") for s in segments]
-        sinks = spark.read.option("basePath", sinks_dir).parquet(*paths)
-    out = search_archive(
-        sinks.drop("split"), logtype_dict, var_dict, query, ignore_case,
-        compiled=compiled,
-    )
-    return out, segments

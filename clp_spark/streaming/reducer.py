@@ -318,6 +318,9 @@ class ReducerServer:
         self._finalized = False
         self.done = threading.Event()
         self.failed = False
+        # a failure no next job can recover from (failed registration,
+        # results-cache write failure): the serving loop exits on it
+        self.unrecoverable = False
 
     # -- scheduler channel -------------------------------------------------
 
@@ -376,7 +379,7 @@ class ReducerServer:
     def serve_one_job(self, scheduler_host: str, scheduler_port: int) -> bool:
         """Register, run one job to completion, return success."""
         if not self.register_with_scheduler(scheduler_host, scheduler_port):
-            self.failed = True
+            self.failed = self.unrecoverable = True
             self.done.set()
             return False
         config = self._read_scheduler_message()
@@ -613,6 +616,7 @@ class ReducerServer:
             # the final ack promises published results — on a cache
             # failure report the job failed instead
             # (ServerContext.cpp:250-256 UnrecoverableFailure)
+            self.unrecoverable = True
             self._fail()
             return
         self._ack_scheduler()

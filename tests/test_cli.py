@@ -30,6 +30,21 @@ def test_compress_then_count(archive, capsys):
     assert capsys.readouterr().out.strip().splitlines()[-1] == "1"
 
 
+def test_count_by_time_skips_untimestamped_lines(tmp_path, capsys):
+    """A line with no timestamp has no time bucket: `s --count-by-time`
+    leaves it out on a single archive as on an archives directory."""
+    (tmp_path / "a.log").write_text(
+        "no timestamp task 0 started\n"
+        "2024-01-01 00:00:01 task 1 started\n"
+    )
+    arch = str(tmp_path / "archives" / "a")
+    cli.main(["c", arch, str(tmp_path / "a.log")])
+    capsys.readouterr()
+    for target in (arch, str(tmp_path / "archives")):
+        cli.main(["s", target, "task", "--count-by-time", "60000"])
+        assert capsys.readouterr().out.split() == ["1704067200000", "1"]
+
+
 def test_search_prints_messages(archive, capsys):
     cli.main(["s", archive, "*starting run*"])
     out = capsys.readouterr().out

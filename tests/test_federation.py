@@ -197,6 +197,17 @@ def test_cli_archives_dir_mode(spark, archives_dir, capsys):
     assert capsys.readouterr().out.strip() == "2"  # arch_b + ts-less arch_c
 
 
+def test_candidate_query_reads_logtype_dicts_once(spark, archives_dir):
+    """The candidate table carries each logtype string, so the decode
+    needs no second scan or broadcast of the member dictionaries."""
+    res = search_archives(spark, archives_dir, "*starting job*")
+    plan = res._sc._jvm.PythonSQLUtils.explainString(
+        res._jdf.queryExecution(), "formatted"
+    )
+    assert "logtype_dict" not in plan, plan
+    assert _fed(res) == _per_archive_union(spark, archives_dir, "*starting job*")
+
+
 def test_segment_hits_prune_split_dirs(spark, archives_dir):
     archives = discover_archives(archives_dir)
     # candidate = arch_c's 'rare marker event' logtype (lives only in split 0)

@@ -91,8 +91,7 @@ def test_layout_partitions(archives):
 )
 def test_search_parity(spark, archives, query):
     """GLT-pruned search returns EXACTLY what the plain path returns."""
-    from clp_spark.operators.glt import search_glt_archive
-    from clp_spark.operators.search import search_archive
+    from clp_spark.operators.search import search_archive, search_archive_dir
 
     plain, glt, _s = archives
     sinks = spark.read.option("basePath", f"{plain}/sinks").parquet(
@@ -106,7 +105,7 @@ def test_search_parity(spark, archives, query):
         (r["doc_id"].rsplit("/", 1)[-1], r["message"])
         for r in search_archive(sinks, lt, vd, query).collect()
     )
-    got_df, tables = search_glt_archive(spark, glt, query)
+    got_df, tables = search_archive_dir(spark, glt, query)
     got = sorted(
         (r["doc_id"].rsplit("/", 1)[-1], r["message"]) for r in got_df.collect()
     )
@@ -116,10 +115,10 @@ def test_search_parity(spark, archives, query):
 def test_partition_filter_in_plan(spark, archives):
     """The pruned scan must show lt_table as a PartitionFilters entry —
     directory pruning before I/O, not a row filter after it."""
-    from clp_spark.operators.glt import search_glt_archive
+    from clp_spark.operators.search import search_archive_dir
 
     _plain, glt, _s = archives
-    res, tables = search_glt_archive(spark, glt, "*unreachable*")
+    res, tables = search_archive_dir(spark, glt, "*unreachable*")
     assert tables is not None and 1 <= len(tables) <= 2
     plan = res._sc._jvm.PythonSQLUtils.explainString(
         res._jdf.queryExecution(), "formatted"
@@ -134,10 +133,10 @@ def test_partition_filter_in_plan(spark, archives):
 def test_match_all_query_scans_everything(spark, archives):
     """A query with no id constraint falls back to the full scan (tables
     list None) and still answers correctly."""
-    from clp_spark.operators.glt import search_glt_archive
+    from clp_spark.operators.search import search_archive_dir
 
     _plain, glt, s = archives
-    res, tables = search_glt_archive(spark, glt, "*")
+    res, tables = search_archive_dir(spark, glt, "*")
     assert tables is None
     assert res.count() == s["messages"]
 

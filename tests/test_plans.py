@@ -113,6 +113,50 @@ class TestPlanShapes:
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+class TestSearchPlanParity:
+    def test_archive_dir_plan_matches_library_search(self, spark, tmp_path):
+        """`search_archive_dir` on a plain text archive runs the same
+        physical plan as `search_archive` over sinks read as the
+        benchmark's library path reads them, so the CLI's overhead over
+        the library is overhead, not a different plan."""
+        import re
+
+        from clp_spark.operators.search import (
+            compile_query,
+            search_archive,
+            search_archive_dir,
+        )
+        from clp_spark.sources.logfiles import compress_text_logs
+
+        log = tmp_path / "a.log"
+        log.write_text("".join(
+            f"2024-01-01 00:00:{i:02d} task {i} started on node-{i % 3}\n"
+            for i in range(20)
+        ))
+        arch = str(tmp_path / "arch")
+        compress_text_logs(spark, str(log), arch)
+        query = "*task 1*"
+
+        raw = spark.read.option("basePath", f"{arch}/sinks").parquet(f"{arch}/sinks")
+        sinks = raw.withColumn("doc_id", F.concat_ws("#", "file_id", "msg_ix")) \
+                   .withColumn("source", F.col("file_id"))
+        lt = spark.read.parquet(f"{arch}/logtype_dict")
+        vd = spark.read.parquet(f"{arch}/var_dict")
+        lib = search_archive(sinks, lt, vd, query,
+                             compiled=compile_query(query, lt, vd))
+        res, pruned = search_archive_dir(spark, arch, query)
+
+        def norm(df):
+            p = re.sub(r"#\d+L?", "#N", plan_of(df))
+            return re.sub(r"plan_id=\d+", "plan_id=N", p)
+
+        assert pruned is None
+        assert norm(res) == norm(lib)
+        assert sorted(r["message"] for r in res.collect()) == sorted(
+            r["message"] for r in lib.collect()
+        )
+
+
 class TestBloomFilters:
     def test_bloom_filter_options_write_real_filters(self, spark, tmp_path):
         """bloom_filter_options produces parquet files that actually carry

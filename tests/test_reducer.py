@@ -346,6 +346,54 @@ class TestServerLoop:
         finally:
             sched.close()
 
+    def test_malformed_job_does_not_stop_the_loop(self, tmp_path):
+        """A malformed job config fails that job only; the loop registers
+        again and serves the next job to the results cache."""
+        from clp_spark import cli
+
+        db = str(tmp_path / "loop.db")
+        sched = FakeScheduler()
+        sched.listener.settimeout(30.0)
+        rc = {}
+
+        def run_cli():
+            try:
+                cli.main([
+                    "reducer-server", "--results-db", db,
+                    "--reducer-port", "0",
+                    "--scheduler-port", str(sched.port),
+                ])
+            except SystemExit as e:
+                rc["code"] = e.code
+
+        t = threading.Thread(target=run_cli, daemon=True)
+        t.start()
+        try:
+            bad, _ = sched.listener.accept()
+            (size,) = struct.unpack("<Q", _recv_exact(bad, 8))
+            _recv_exact(bad, size)
+            body = msgpack_pack({"job_id": -1})
+            bad.sendall(struct.pack("<Q", len(body)) + body)
+            bad.settimeout(30.0)
+            assert bad.recv(1) == b""  # job refused without the ready ack
+            bad.close()
+
+            sched.accept_and_configure(73, None)
+            sock = connect_to_reducer(
+                "127.0.0.1", sched.advertisement["port"], 73
+            )
+            assert sock is not None
+            send_pipeline_results(sock, [((), [{"count": 5}])])
+            sock.close()
+            sched.send_all_results_sent()
+            sched.wait_final_ack()
+            assert ResultsCache(db).read_documents(73) == [
+                {"group_tags": [], "records": [{"count": 5}]}
+            ]
+            assert "code" not in rc
+        finally:
+            sched.close()
+
 
 class TestTruncBucketExtremes:
     def test_int64_extremes_no_overflow(self):

@@ -27,9 +27,8 @@ from clp_spark.operators.schema_archive import (
     int_encodable_col,
     schema_interpretations,
     schema_typed_encode,
-    search_schema_archive,
 )
-from clp_spark.operators.search import QueryToken, tokenize_query
+from clp_spark.operators.search import QueryToken, search_archive_dir, tokenize_query
 from clp_spark.oracle.encoder import encode_float, encode_int
 from clp_spark.sources.logfiles import decompress_file
 
@@ -236,7 +235,7 @@ def originals(spark):
 def test_search_parity(spark, archive, originals, query):
     out, _ = archive
     got = sorted(
-        r["message"] for r in search_schema_archive(spark, out, query).collect()
+        r["message"] for r in search_archive_dir(spark, out, query)[0].collect()
     )
     want = sorted(
         r["message"]
@@ -252,7 +251,7 @@ def test_search_parity_ignore_case(spark, archive, originals, query):
     out, _ = archive
     got = sorted(
         r["message"]
-        for r in search_schema_archive(spark, out, query, ignore_case=True).collect()
+        for r in search_archive_dir(spark, out, query, ignore_case=True)[0].collect()
     )
     want = sorted(
         r["message"]
@@ -292,7 +291,7 @@ def test_schema_compile_beats_heuristic(spark, tmp_path):
     assert compiled != "MATCH_ALL" and len(compiled) >= 1
     got = [
         r["message"]
-        for r in search_schema_archive(spark, out, "* failed now*").collect()
+        for r in search_archive_dir(spark, out, "* failed now*")[0].collect()
     ]
     assert got == ["job two failed now"]
 
@@ -347,9 +346,9 @@ def test_federated_schema_groups_compile_once(spark, tmp_path, monkeypatch):
         for aid in ["a0", "a1", "a2", "b"]:
             per += [
                 (aid, r["message"])
-                for r in search_schema_archive(
+                for r in search_archive_dir(
                     spark, str(adir / aid), q
-                ).collect()
+                )[0].collect()
             ]
         assert fed == sorted(per), q
 
@@ -438,7 +437,7 @@ def test_search_fuzz_differential(spark, archive, originals):
     for q in sorted(queries):
         got = sorted(
             r["message"]
-            for r in search_schema_archive(spark, out, q).collect()
+            for r in search_archive_dir(spark, out, q)[0].collect()
         )
         want = sorted(
             r["message"]

@@ -6,7 +6,8 @@ from pyspark.sql import functions as F
 
 from clp_spark.functions.arrow_kernel import encode_df
 from clp_spark.operators.dictionary import assign_sorted_ids
-from clp_spark.operators.seg_index import search_archive_pruned, write_segment_index
+from clp_spark.operators.search import search_archive_dir
+from clp_spark.operators.seg_index import write_segment_index
 
 
 @pytest.fixture(scope="module")
@@ -43,25 +44,25 @@ def archive(spark, tmp_path_factory):
 
 
 def test_rare_logtype_prunes_to_one_segment(spark, archive):
-    res, segments = search_archive_pruned(spark, archive, "*rare marker*")
+    res, segments = search_archive_dir(spark, archive, "*rare marker*")
     assert segments == [0]  # only split 0 is opened
     assert [r["doc_id"] for r in res.collect()] == [0]
 
 
 def test_common_logtype_reads_both_segments(spark, archive):
-    res, segments = search_archive_pruned(spark, archive, "*common event*")
+    res, segments = search_archive_dir(spark, archive, "*common event*")
     assert segments == [0, 1]
     assert sorted(r["doc_id"] for r in res.collect()) == [1, 2, 3, 4]
 
 
 def test_match_all_is_unpruned(spark, archive):
-    res, segments = search_archive_pruned(spark, archive, "*")
+    res, segments = search_archive_dir(spark, archive, "*")
     assert segments is None
     assert res.count() == 6
 
 
 def test_no_match_prunes_everything(spark, archive):
-    res, segments = search_archive_pruned(spark, archive, "*absentword*")
+    res, segments = search_archive_dir(spark, archive, "*absentword*")
     assert segments == []
     assert res.count() == 0
 
@@ -69,6 +70,6 @@ def test_no_match_prunes_everything(spark, archive):
 def test_var_query_still_correct_under_pruning(spark, archive):
     # 'number 3' has an int var; logtype is shared across splits → both read,
     # exactness from the ordered-var filter + final verify
-    res, segments = search_archive_pruned(spark, archive, "*number 3*")
+    res, segments = search_archive_dir(spark, archive, "*number 3*")
     assert segments == [0, 1]
     assert [r["doc_id"] for r in res.collect()] == [3]
