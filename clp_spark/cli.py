@@ -162,12 +162,16 @@ def cmd_compress(args) -> None:
     if args.json:
         # clp-s c: JSONL → per-schema typed tables + ordered-reconstruction
         # manifest (operators/json_archive.py)
+        import shutil
+
         from pyspark.sql import functions as F
 
         from clp_spark.operators.json_archive import (
             archive_stats,
             compress_jsonl_archive,
+            compress_jsonl_archives_multi,
         )
+        from clp_spark.sinks.single_file_archive import pack_archive
         from clp_spark.sources.logfiles import expand_tar_inputs
 
         # clp-s deduces each input's type by content (JsonParser.cpp:
@@ -266,93 +270,54 @@ def cmd_compress(args) -> None:
                 with_source="_src_file",
             )
             df = kv_df if df is None else df.unionByName(kv_df)
+        kw = dict(
+            order_col="_rec_ix",
+            structurize_arrays=args.structurize_arrays,
+            timestamp_key=args.timestamp_key,
+            retain_float_format=not args.no_retain_float_format,
+            record_log_order=not args.disable_log_order,
+            compression_level=args.compression_level,
+            max_document_size=args.max_document_size,
+            min_table_size=args.min_table_size,
+            source_col="_src_file",
+            source_names=src_names,
+        )
         if args.target_encoded_size is not None:
             # clp-s --target-encoded-size: split into multiple archives
-            from clp_spark.operators.json_archive import (
-                compress_jsonl_archives_multi,
-            )
-
             summary = compress_jsonl_archives_multi(
-                df, "raw", args.archive, args.target_encoded_size,
-                order_col="_rec_ix",
-                structurize_arrays=args.structurize_arrays,
-                timestamp_key=args.timestamp_key,
-                retain_float_format=not args.no_retain_float_format,
-                record_log_order=not args.disable_log_order,
-                compression_level=args.compression_level,
-                max_document_size=args.max_document_size,
-                min_table_size=args.min_table_size,
-                source_col="_src_file",
-                source_names=src_names,
+                df, "raw", args.archive, args.target_encoded_size, **kw
             )
-            stats_lines = (
-                [archive_stats(s["dir"]) for s in summary["per_archive"]]
-                if args.print_archive_stats else []
-            )
-            if args.single_file_archive:
-                # pack each produced archive dir into one file named by its
-                # archive id (ArchiveWriter.cpp:145-147 writes archives_dir/id
-                # and removes the directory)
-                import shutil
-
-                from clp_spark.sinks.single_file_archive import pack_archive
-
-                for i, s in enumerate(summary["per_archive"]):
-                    d = s["dir"]
-                    pack_archive(
-                        d, d + ".sfa",
-                        timestamp_dict=(
-                            {"timestamp_key": args.timestamp_key}
-                            if args.timestamp_key else None
-                        ),
-                    )
-                    shutil.rmtree(d)
-                    os.replace(d + ".sfa", d)
-                    if stats_lines:
-                        # compressed size = the packed file, like the
-                        # reference's single-file ArchiveStats
-                        stats_lines[i]["size"] = os.path.getsize(d)
-                summary["single_file_archives"] = len(summary["per_archive"])
+            dirs = [s["dir"] for s in summary["per_archive"]]
         else:
-            out_dir = (
-                args.archive + ".unpacked" if args.single_file_archive
-                else args.archive
-            )
-            summary = compress_jsonl_archive(
-                df, "raw", out_dir, order_col="_rec_ix",
-                structurize_arrays=args.structurize_arrays,
-                timestamp_key=args.timestamp_key,
-                retain_float_format=not args.no_retain_float_format,
-                record_log_order=not args.disable_log_order,
-                compression_level=args.compression_level,
-                max_document_size=args.max_document_size,
-                min_table_size=args.min_table_size,
-                source_col="_src_file",
-                source_names=src_names,
-            )
-            stats_lines = (
-                [archive_stats(out_dir)] if args.print_archive_stats else []
-            )
+            summary = compress_jsonl_archive(df, "raw", args.archive, **kw)
+            dirs = [os.path.normpath(args.archive)]
+        stats_lines = []
+        for d in dirs:
+            if args.print_archive_stats:
+                stats_lines.append(archive_stats(d))
             if args.single_file_archive:
-                import shutil
-
-                from clp_spark.sinks.single_file_archive import pack_archive
-
+                # pack the archive dir into one file under the same name
+                # (ArchiveWriter.cpp:145-147 writes archives_dir/id and
+                # removes the directory)
+                packed = d + ".sfa"
                 sfa = pack_archive(
-                    out_dir, args.archive,
+                    d, packed,
                     timestamp_dict=(
                         {"timestamp_key": args.timestamp_key}
                         if args.timestamp_key else None
                     ),
                 )
-                shutil.rmtree(out_dir)
-                summary["dir"] = args.archive
-                summary["single_file_archive"] = sfa
+                shutil.rmtree(d)
+                os.replace(packed, d)
                 if stats_lines:
-                    stats_lines[0]["id"] = os.path.basename(
-                        os.path.normpath(args.archive)
-                    )
-                    stats_lines[0]["size"] = os.path.getsize(args.archive)
+                    # compressed size = the packed file, like the
+                    # reference's single-file ArchiveStats
+                    stats_lines[-1]["size"] = os.path.getsize(d)
+        if args.single_file_archive:
+            if args.target_encoded_size is not None:
+                summary["single_file_archives"] = len(dirs)
+            else:
+                summary["single_file_archive"] = sfa
         for line in stats_lines:
             # clp-s --print-archive-stats: one JSON line per archive on
             # stdout at close (ArchiveWriter.cpp:125-128)
@@ -806,12 +771,16 @@ def cmd_search(args) -> None:
         if args.file_path:
             # clg --file-path: only messages from one original file
             res = res.where(_file_path_pred(F.col("source"), args.file_path))
+        if args.count_by_time is not None and "ts_ms" in res.columns:
+            # a message with no timestamp has no time bucket
+            res = res.where(F.col("ts_ms").isNotNull())
     else:
         from pyspark.errors import AnalysisException
 
         from clp_spark.operators.search import search_archive_dir
 
-        # --file-path / --tge / --tle filter the encoded rows before the
+        # --file-path / --tge / --tle (and --count-by-time, which drops
+        # messages with no timestamp) filter the encoded rows before the
         # decode; sinks partition on file_id, so --file-path prunes the scan
         conds = []
         if args.file_path:
@@ -820,6 +789,8 @@ def cmd_search(args) -> None:
             conds.append(F.col("ts_ms") >= F.lit(args.tge))
         if args.tle is not None:
             conds.append(F.col("ts_ms") <= F.lit(args.tle))
+        if args.count_by_time is not None:
+            conds.append(F.col("ts_ms").isNotNull())
         try:
             res = search_archive_dir(
                 spark, args.archive, queries, args.ignore_case,
@@ -828,9 +799,10 @@ def cmd_search(args) -> None:
         except AnalysisException:
             if not conds:
                 raise
-            sys.exit("error: --file-path and --tge/--tle need a text-log "
-                     "archive (it carries file ids and per-message "
-                     "timestamps; token-pipeline archives do not)")
+            sys.exit("error: --file-path, --tge/--tle and --count-by-time "
+                     "need a text-log archive (it carries file ids and "
+                     "per-message timestamps; token-pipeline archives do "
+                     "not)")
     if args.count:
         if args.output_handler == "reducer":
             _send_reducer_count(res, args)
@@ -843,12 +815,11 @@ def cmd_search(args) -> None:
                 "timestamps (text-log archives carry ts_ms; token-pipeline "
                 "archives do not)"
             )
-        cbt = res.where(F.col("ts_ms").isNotNull())
         if args.output_handler == "reducer":
-            _send_reducer_count_by_time(cbt, "ts_ms", args)
+            _send_reducer_count_by_time(res, "ts_ms", args)
         else:
             rows = count_by_time(
-                cbt, F.col("ts_ms"), args.count_by_time,
+                res, F.col("ts_ms"), args.count_by_time,
             ).orderBy("bucket_ts").collect()
             for r in rows:
                 print(r["bucket_ts"], r["cnt"])
@@ -856,22 +827,26 @@ def cmd_search(args) -> None:
         _emit_search_results(res, args)
 
 
-def _emit_federated_telemetry(
-    t_sink: list, shape: dict, args, start_ns: int,
-    error: str | None = None,
+def _emit_search_telemetry(
+    t_sink: list, shape, args, start_ns: int,
+    matches: tuple[int, int] | None = None, error: str | None = None,
 ) -> None:
-    """One telemetry span per member archive on the federated path (the
-    reference's per-archive search loop emits one each, clp-s.cpp:437),
-    exported as ONE batched OTLP request — a 10k-archive fleet must not
-    issue 10k sequential POSTs. Spans share the job's start time (the
-    grouped one-job plan searches every member together, so per-archive
-    wall time is the job's). Pruned archives carry their termination
-    stage; every span carries the archive's record count; scanned
-    archives omit the match counters (per-archive match attribution
-    does not exist in the single-plan shape, documented in STATUS.md).
-    A job-level failure marks every member span failed, like the
-    reference's per-archive error recording. ``shape`` is the query's
-    shape metrics, computed before the search starts."""
+    """clp-s --enable-telemetry: one span per member archive record of
+    ``search_json_members`` (the reference's per-archive search loop
+    emits one each, clp-s.cpp:141-176,437), exported as ONE batched OTLP
+    request — a 10k-archive fleet must not issue 10k sequential POSTs.
+    Spans share the search's start time. The query hash covers the RAW
+    user query (the reference hashes get_query() before the
+    timestamp-condition transform); ``shape`` walks the transformed
+    query, where the injected range conditions count as predicates.
+    Every span carries the member's record count and termination stage;
+    pruned members also carry the (zero) match counters. ``matches`` —
+    (records matching the query, schemas with matches), measured on the
+    result — exists only for a one-member search: in a larger fleet's
+    one-job plan per-archive match attribution does not exist, so its
+    scanned members omit the match counters (documented in STATUS.md).
+    A failure marks every span failed, like the reference's per-archive
+    error recording."""
     from clp_spark.operators.telemetry import SearchTelemetrySpan, export_spans
 
     payloads = []
@@ -881,9 +856,16 @@ def _emit_federated_telemetry(
         span.set_query_shape_metrics(shape)
         span.set_archive_context(rec["archive_id"])
         span.set_termination_stage(rec["termination_stage"])
-        if rec["termination_stage"]:
+        if matches is not None or rec["termination_stage"]:
+            n_query, n_with_matches = matches or (0, 0)
             span.set_search_result_metrics(
-                num_archive_records=rec["num_archive_records"]
+                num_archive_records=rec["num_archive_records"],
+                num_archive_records_matching_schemas=(
+                    rec["num_archive_records_matching_schemas"]
+                ),
+                num_archive_records_matching_query=n_query,
+                num_matched_schemas=rec["num_matched_schemas"],
+                num_schemas_with_matches=n_with_matches,
             )
         else:
             span.set_archive_record_count(rec["num_archive_records"])
@@ -954,7 +936,8 @@ def _json_ts_ms(v, patterns=None):
     return F.coalesce(num, string_ts_ms(v, patterns))
 
 
-def _kql_aggregate(res, json_col: str, args, ts_patterns=None) -> bool:
+def _kql_aggregate(res, json_col: str, args, ts_key: str | None,
+                   ts_patterns=None) -> bool:
     """clp-s search aggregators (--count / --count-by-time / --min / --max /
     --unique, mutually exclusive — reference CommandLineArguments.cpp:783-798,
     1166-1184; aggregators.hpp:66-183). Returns True if an aggregate flag
@@ -979,10 +962,10 @@ def _kql_aggregate(res, json_col: str, args, ts_patterns=None) -> bool:
     if args.count_by_time is not None:
         from clp_spark.operators.aggregate import count_by_time
 
-        if not args.timestamp_key:
+        if not ts_key:
             sys.exit("error: --count-by-time needs --timestamp-key "
                      "(or an archive compressed with one)")
-        key = args.timestamp_key.split(":", 1)[0]
+        key = ts_key.split(":", 1)[0]
         ts = _json_ts_ms(
             F.get_json_object(F.col(json_col), "$." + key), ts_patterns
         )
@@ -1113,7 +1096,7 @@ def _json_path_get(obj, dotted: str | None):
     return obj
 
 
-def _emit_kql_results(out, col: str, args, archive_id: str = "",
+def _emit_kql_results(out, col: str, args,
                       ts_key: str | None = None) -> None:
     """clp-s output handlers (clp-s.cpp:296-342, OutputHandlerImpl.cpp:
     31-72): stdout prints each serialized record; file and network emit
@@ -1122,11 +1105,11 @@ def _emit_kql_results(out, col: str, args, archive_id: str = "",
     placeholder in the reference too. Driver-side bounded sink, like
     every CLI output path."""
     handler = getattr(args, "output_handler", "stdout")
-    rows = out.collect()
     if handler == "stdout":
-        for r in rows:
+        for r in out.select(col).collect():
             print(r[col])
         return
+    rows = out.collect()
 
     from clp_spark.sinks.single_file_archive import msgpack_pack
 
@@ -1144,9 +1127,9 @@ def _emit_kql_results(out, col: str, args, archive_id: str = "",
             if isinstance(v, (int, float)) and not isinstance(v, bool):
                 ts = int(v)
         idx = r[idx_col] if idx_col else None
-        aid = r["archive_id"] if has_aid else archive_id
+        aid = r["archive_id"] if has_aid else ""
         return msgpack_pack(
-            (ts, msg, "", aid or "", int(idx) if idx is not None else 0)
+            (ts, msg, "", aid, int(idx) if idx is not None else 0)
         )
 
     if handler == "file":
@@ -1162,10 +1145,10 @@ def _emit_kql_results(out, col: str, args, archive_id: str = "",
 
 
 def _kql_output(res, col: str, args, ts_key: str | None,
-                ts_pats=None, archive_id: str = "") -> None:
+                ts_pats=None) -> None:
     """The one `s-kql` result tail: an aggregate flag, or latest-N →
     projection → limit → the output handler."""
-    if _kql_aggregate(res, col, args, ts_pats):
+    if _kql_aggregate(res, col, args, ts_key, ts_pats):
         return
     if args.max_num_results is not None:
         res = _latest_n(res, col, ts_key, args.max_num_results, ts_pats)
@@ -1173,7 +1156,7 @@ def _kql_output(res, col: str, args, ts_key: str | None,
         res = _apply_projection(res, col, args.projection)
     if args.limit is not None:
         res = res.limit(args.limit)
-    _emit_kql_results(res, col, args, archive_id=archive_id, ts_key=ts_key)
+    _emit_kql_results(res, col, args, ts_key=ts_key)
 
 
 def _kv_ir_stream_paths(input_path: str) -> list[str]:
@@ -1282,156 +1265,88 @@ def cmd_search_kql(args) -> None:
         # clp-s `s` routes IR-file inputs to the direct kv-IR search
         _search_kv_ir_streams(spark, kv_paths, args)
         return
-    from clp_spark.operators.json_archive import discover_json_archives
+    from clp_spark.operators.json_archive import (
+        archive_timestamp_key,
+        archive_timestamp_patterns,
+        discover_json_archives,
+        json_archive_members,
+        search_json_members,
+    )
 
     if not is_json_archive(args.input) and discover_json_archives(args.input):
-        # clp-s `s <archives-dir>`: a DIRECTORY of JSON archives searches
-        # federated in one Spark job; --archive-id restricts to one
-        from clp_spark.operators.json_archive import (
-            archive_timestamp_key,
-            archive_timestamp_patterns,
-            search_json_archives,
-        )
-
-        ts_key = args.timestamp_key or archive_timestamp_key(
-            discover_json_archives(args.input)[0]
-        )
-        ts_pats: list[str] = []
-        for d in discover_json_archives(args.input):
-            for p in archive_timestamp_patterns(d):
-                if p not in ts_pats:
-                    ts_pats.append(p)
-        query = _kql_with_ts_range(args.query, ts_key, args.tge, args.tle)
-        t_sink = (
-            [] if getattr(args, "enable_telemetry", False) else None
-        )
-        t_shape = None
-        if t_sink is not None:
-            # parsed once, before the search: a query that fails to parse
-            # raises here, and the telemetry in `finally` cannot re-raise
-            # over the original error
-            from clp_spark.operators.kql import parse_kql
-            from clp_spark.operators.telemetry import query_shape_metrics
-
-            t_shape = query_shape_metrics(parse_kql(query), args.tge, args.tle)
-        t_start = time.time_ns() if t_sink is not None else 0
-        t_err: str | None = None
-        try:
-            res = search_json_archives(
-                spark, args.input, query,
-                ignore_case=args.ignore_case,
-                timestamp_key=args.timestamp_key,
-                archive_id=args.archive_id,
-                tge=args.tge, tle=args.tle,
-                telemetry_sink=t_sink,
-            )
-            _kql_output(res, "json", args, ts_key, ts_pats)
-        except BaseException as exc:
-            t_err = str(exc)
-            raise
-        finally:
-            if t_sink is not None:
-                _emit_federated_telemetry(
-                    t_sink, t_shape, args, t_start, error=t_err
-                )
-        return
-    if args.archive_id:
+        # clp-s `s <archives-dir>`: every member archive (or the one
+        # --archive-id names) searches as one Spark job
+        dirs = json_archive_members(args.input, args.archive_id)
+    elif args.archive_id:
         sys.exit("error: --archive-id needs a directory of JSON archives")
-    if is_json_archive(args.input):
-        # compressed JSON archive: search the typed tables directly
-        # (clp-s `s <archive>` — no raw JSON re-parse)
-        from clp_spark.operators.json_archive import (
-            archive_timestamp_key,
-            archive_timestamp_patterns,
-            search_json_archive,
-        )
-
-        if args.timestamp_key is None:
-            args.timestamp_key = archive_timestamp_key(args.input)
-        ts_pats = archive_timestamp_patterns(args.input)
-
+    elif is_json_archive(args.input):
+        # clp-s `s <archive>`: the typed tables, no raw JSON re-parse
+        dirs = [args.input]
+    else:
         query = _kql_with_ts_range(
             args.query, args.timestamp_key, args.tge, args.tle
         )
-        tinfo = {} if getattr(args, "enable_telemetry", False) else None
-        span = None
-        cached = None
-        if tinfo is not None:
-            # clp-s --enable-telemetry: one span per archive search
-            # (SearchTelemetry.cpp; clp-s.cpp:141-176,209-215). The query
-            # hash covers the RAW user query (the reference hashes
-            # get_query() before the timestamp-condition transform); the
-            # SHAPE metrics walk the transformed query, where the
-            # injected range conditions count as predicates — same as
-            # the reference's post-AddTimestampConditions create().
-            from clp_spark.operators.telemetry import SearchTelemetrySpan
+        res = search_jsonl(
+            spark.read.text(args.input).withColumnRenamed("value", "raw"),
+            "raw", query,
+            ignore_case=args.ignore_case,
+            structurize_arrays=args.structurize_arrays,
+            timestamp_key=args.timestamp_key,
+        )
+        _kql_output(res, "raw", args, args.timestamp_key)
+        return
+    # clp-s `c --timestamp-key`: the searched archives remember their key
+    # and string-timestamp patterns, so search defaults to them
+    ts_key = args.timestamp_key or next(
+        filter(None, map(archive_timestamp_key, dirs)), None
+    )
+    ts_pats = list(dict.fromkeys(
+        p for d in dirs for p in archive_timestamp_patterns(d)
+    ))
+    query = _kql_with_ts_range(args.query, ts_key, args.tge, args.tle)
+    t_sink = [] if getattr(args, "enable_telemetry", False) else None
+    t_shape = None
+    if t_sink is not None:
+        # parsed once, before the search: a query that fails to parse
+        # raises here, and the telemetry in `finally` cannot re-raise
+        # over the original error
+        from clp_spark.operators.kql import parse_kql
+        from clp_spark.operators.telemetry import query_shape_metrics
 
-            span = SearchTelemetrySpan()
-            span.set_query_context(args.query)
-        try:
-            if span is not None:
-                from clp_spark.operators.kql import parse_kql
-                from clp_spark.operators.telemetry import (
-                    query_shape_metrics,
-                )
-
-                span.set_query_shape_metrics(
-                    query_shape_metrics(
-                        parse_kql(query), args.tge, args.tle
-                    )
-                )
-            res = search_json_archive(
-                spark, args.input, query,
-                ignore_case=args.ignore_case,
-                timestamp_key=args.timestamp_key,
-                telemetry_info=tinfo,
-                tge=args.tge, tle=args.tle,
-            )
-            if span is not None:
-                span.set_archive_context(tinfo.get("archive_id", ""))
-                # one bounded aggregation over the (already small)
-                # result set supplies the match-side counters
+        t_shape = query_shape_metrics(parse_kql(query), args.tge, args.tle)
+    t_start = time.time_ns()
+    t_err: str | None = None
+    matches = cached = None
+    try:
+        res = search_json_members(
+            spark, dirs, query,
+            ignore_case=args.ignore_case,
+            timestamp_key=args.timestamp_key,
+            tge=args.tge, tle=args.tle,
+            telemetry_sink=t_sink,
+        )
+        if t_sink is not None:
+            if len(dirs) == 1:
+                # one bounded aggregation over the (already small) result
+                # set supplies the match-side counters
                 cached = res = res.persist()
                 agg = res.agg(
                     F.count("*").alias("n"),
                     F.countDistinct("__sid__").alias("s"),
                 ).collect()[0]
-                span.set_search_result_metrics(
-                    num_archive_records=tinfo["num_archive_records"],
-                    num_archive_records_matching_schemas=(
-                        tinfo["num_archive_records_matching_schemas"]
-                    ),
-                    num_archive_records_matching_query=agg["n"],
-                    num_matched_schemas=tinfo["num_matched_schemas"],
-                    num_schemas_with_matches=int(agg["s"] or 0),
-                )
-                span.set_termination_stage(tinfo["termination_stage"])
-                res = res.drop("__sid__")
-            _kql_output(
-                res, "json", args, args.timestamp_key, ts_pats,
-                archive_id=os.path.basename(os.path.normpath(args.input)),
+                matches = (agg["n"], int(agg["s"] or 0))
+            res = res.drop("__sid__")
+        _kql_output(res, "json", args, ts_key, ts_pats)
+    except BaseException as exc:
+        t_err = str(exc)
+        raise
+    finally:
+        if t_sink is not None:
+            _emit_search_telemetry(
+                t_sink, t_shape, args, t_start, matches, error=t_err
             )
-        except BaseException as exc:
-            if span is not None:
-                span.set_error(str(exc))
-            raise
-        finally:
-            if span is not None:
-                span.end()
-            if cached is not None:
-                cached.unpersist()
-        return
-    df = spark.read.text(args.input).withColumnRenamed("value", "raw")
-    query = _kql_with_ts_range(
-        args.query, args.timestamp_key, args.tge, args.tle
-    )
-    res = search_jsonl(
-        df, "raw", query,
-        ignore_case=args.ignore_case,
-        structurize_arrays=args.structurize_arrays,
-        timestamp_key=args.timestamp_key,
-    )
-    _kql_output(res, "raw", args, args.timestamp_key)
+        if cached is not None:
+            cached.unpersist()
 
 
 def cmd_kv_import(args) -> None:

@@ -22,6 +22,13 @@ Spark-first shape:
   empty-object leaves re-emit as variant constants, and to_json(...,
   ignoreNullFields=false) serializes. Union of schema tables ordered by
   log_event_idx = the original stream. No per-row Python anywhere.
+- **Search** — one plan, ``search_json_members``, for any list of member
+  archives (a single archive is a fleet of one, as the reference loops one
+  per-archive search): per member, a manifest read, the '$' range-index
+  rewrite and the time prune; then one multi-directory scan per (schema,
+  rewrite) group with the compiled predicate, returning matches through
+  the same rebuild expression as reconstruction. ``search_json_archive``
+  and ``search_json_archives`` are one-call entries into it.
 
 Fidelity contract (what the round-trip preserves exactly): record ORDER,
 the key SET per record, every value (ints/floats/bools/strings/nulls/
@@ -781,171 +788,6 @@ def _manifest_time_disjoint(
     )
 
 
-def search_json_archive(
-    spark: SparkSession,
-    archive_dir: str,
-    query: str,
-    ignore_case: bool = False,
-    timestamp_key: str | None = None,
-    telemetry_info: dict | None = None,
-    tge: int | None = None,
-    tle: int | None = None,
-) -> DataFrame:
-    """KQL search over a COMPRESSED JSON archive on disk — the clp-s
-    `s <archive> <query>` path: no raw JSON is re-parsed; each non-pruned
-    schema's typed parquet table is scanned with the compiled predicate
-    (schema-match pruning means a schema whose columns can't satisfy the
-    query costs zero I/O beyond its manifest entry). Matching records are
-    returned as (log_event_idx, json) via the same ordered reconstruction
-    as `x`.
-
-    Array-leaf probes: unstructured arrays were stored as their JSON text;
-    a variant of just the array subtree is synthesized per schema so the
-    shared compile path (json_search._array_probe) works unchanged.
-    Scalar-root records carry no keys and are never matched (same as the
-    wide path, where they contribute no typed columns).
-
-    ``timestamp_key`` applies clp-s's timestamp normalization (double =
-    epoch seconds → ms; digit strings → ms) to the named column for
-    comparisons, without altering the reconstructed output.
-
-    ``tge``/``tle`` (the CLI's explicit epoch-ms range flags) enable the
-    archive-level timestamp prune: a manifest time range disjoint from
-    [tge, tle] terminates before any table I/O, the reference's
-    EvaluateTimestampIndex stage (clp-s.cpp:230-236). Range conditions
-    embedded in the KQL text itself do not trigger this prune.
-
-    ``telemetry_info``, when a dict, is filled with the per-archive
-    search-telemetry counters the reference records
-    (SearchTelemetry.hpp SearchResultMetrics + the termination stage):
-    archive_id, num_matched_schemas, num_archive_records,
-    num_archive_records_matching_schemas, termination_stage. When
-    telemetry is on, result rows also carry a ``__sid__`` schema-id
-    column so the caller can count schemas-with-matches; callers must
-    drop it before output.
-    """
-    from clp_spark.operators.json_search import JsonArchive
-    from clp_spark.operators.kql import (
-        evaluate_range_index_filters,
-        fold_range_index_const,
-        has_range_index_filter,
-        parse_kql,
-    )
-    from pyspark.sql.types import DoubleType
-
-    with open(os.path.join(archive_dir, _MANIFEST)) as f:
-        manifest = json.load(f)
-    structurize = manifest["structurize_arrays"]
-    has_order = manifest.get("log_order", True)
-    if timestamp_key is None:
-        timestamp_key = manifest.get("timestamp_key")
-    ast = parse_kql(query)
-    empty_schema = "log_event_idx long, json string" + (
-        ", __sid__ string" if telemetry_info is not None else ""
-    )
-    if telemetry_info is not None:
-        telemetry_info.update({
-            "archive_id": os.path.basename(os.path.normpath(archive_dir)),
-            "num_archive_records": _manifest_record_count(manifest),
-            "num_matched_schemas": 0,
-            "num_archive_records_matching_schemas": 0,
-            "termination_stage": "",
-        })
-    if has_range_index_filter(ast):
-        # '$'-namespace filters evaluate against the archive range index
-        # and rewrite into log_event_idx bounds before any table compile
-        # (EvaluateRangeIndexFilters parity)
-        ast = evaluate_range_index_filters(
-            ast, manifest.get("range_index"), IDX_COL, ignore_case
-        )
-        if fold_range_index_const(ast, IDX_COL) is False:
-            if telemetry_info is not None:
-                telemetry_info["termination_stage"] = "range_index_matching"
-            return spark.createDataFrame([], empty_schema)
-    # archive-level timestamp prune (EvaluateTimestampIndex,
-    # clp-s.cpp:230-236): a stored [begin, end] disjoint from the CLI's
-    # [tge, tle] terminates before any table I/O
-    if _manifest_time_disjoint(manifest, timestamp_key, tge, tle):
-        if telemetry_info is not None:
-            telemetry_info["termination_stage"] = "time_range_matching"
-        return spark.createDataFrame([], empty_schema)
-    # borrow JsonArchive's compiler without (re)building an in-memory
-    # archive; metadata maps the order column so bare-value filters skip it
-    compiler = JsonArchive.__new__(JsonArchive)
-    compiler.metadata = {IDX_COL: None}
-    compiler.timestamp_key = timestamp_key
-    lazy = _packed_reader(archive_dir) is not None
-    out: DataFrame | None = None
-    for entry in manifest["schemas"]:
-        if entry["schema_id"] == _SCALAR_ID:
-            continue
-        if lazy and _ddl_prunes(
-            spark, entry, structurize, timestamp_key, ast, ignore_case
-        ):
-            # packed archive: the manifest DDL alone proves this schema
-            # unmatchable — its table members never leave the container
-            continue
-        tbl = _load_schema_table(spark, archive_dir, entry)
-        leaves = [(tuple(p), k) for p, k in entry["leaves"]]
-        # reconstruction expression FIRST, from the untouched typed columns
-        work = tbl.withColumn(
-            "__json__", _rebuild_expr(tbl, leaves, structurize)
-        )
-        arr_leaves = [
-            (p, k[len("array:"):]) for p, k in leaves
-            if k.startswith("array:")
-        ]
-        if arr_leaves:
-            varr = _rebuild_expr(
-                tbl, [(p, k) for p, k in leaves if k.startswith("array:")],
-                structurize,
-            )
-            work = work.withColumn("__v__", F.parse_json(varr))
-        if timestamp_key and timestamp_key in work.columns:
-            from clp_spark.operators.json_search import normalize_ts_column
-
-            norm = normalize_ts_column(
-                work, timestamp_key,
-                patterns=manifest.get("timestamp_patterns"),
-            )
-            if norm is not None:
-                work = work.withColumn(timestamp_key, norm)
-        # storage internals (the reconstruction text and float-format
-        # descriptor columns) must never resolve as record columns — a
-        # bare-value or wildcard-column filter would otherwise probe them
-        internal = ["__json__"] + [
-            c for c in work.columns if c.startswith("__fmt_")
-        ]
-        pred = compiler._compile(
-            work.drop(*internal), ast, ignore_case, arr_leaves
-        )
-        if pred is None:
-            continue  # schema pruned
-        if telemetry_info is not None:
-            telemetry_info["num_matched_schemas"] += 1
-            telemetry_info["num_archive_records_matching_schemas"] += (
-                entry.get("rows", 0)
-            )
-        hit = work.where(pred).select(
-            (F.col(IDX_COL) if has_order else F.lit(None).cast("long"))
-            .alias("log_event_idx"),
-            F.col("__json__").alias("json"),
-            *(
-                [F.lit(str(entry["schema_id"])).alias("__sid__")]
-                if telemetry_info is not None else []
-            ),
-        )
-        out = hit if out is None else out.unionAll(hit)
-    if out is None:
-        # every schema pruned: an empty result with the result schema —
-        # built directly so no table is read (matters for packed archives,
-        # where a read would ranged-extract members just to return nothing)
-        if telemetry_info is not None:
-            telemetry_info["termination_stage"] = "schema_matching"
-        return spark.createDataFrame([], empty_schema)
-    return out
-
-
 def _store_unordered(spark: SparkSession, archive_dir: str, out_dir: str) -> dict:
     """clp-s `x` WITHOUT `--ordered` (the reference's default,
     JsonConstructor.cpp:49-56): append every record to ONE file named
@@ -1119,41 +961,12 @@ def discover_json_archives(root: str) -> list[str]:
     return [e.path for e in entries if e.is_dir() and is_json_archive(e.path)]
 
 
-def search_json_archives(
-    spark: SparkSession,
-    root: str,
-    query: str,
-    ignore_case: bool = False,
-    timestamp_key: str | None = None,
-    archive_id: str | None = None,
-    tge: int | None = None,
-    tle: int | None = None,
-    telemetry_sink: list | None = None,
-) -> DataFrame:
-    """Federated KQL search over a DIRECTORY of JSON archives → one
-    DataFrame (archive_id, log_event_idx, json). `archive_id` restricts to
-    a single archive (the clp-s `--archive-id` flag). Each archive's
-    schema-match pruning still applies, so the union only scans tables
-    whose columns can satisfy the query — the whole dir searches as ONE
-    Spark job.
-
-    ``tge``/``tle`` prune whole member archives whose manifest time range
-    is disjoint from the search window (the reference's per-archive
-    EvaluateTimestampIndex stage) — at fleet scale a narrow window skips
-    almost every archive before any footer I/O.
-
-    ``telemetry_sink``, when a list, receives one dict per member
-    archive: {archive_id, num_archive_records, termination_stage} —
-    stage "time_range_matching"/"range_index_matching" for archives
-    pruned during the manifest sweep, "" for archives that joined the
-    scan (per-archive match counts are not attributable in the grouped
-    one-job plan; the reference's early-termination spans likewise
-    carry only the record count)."""
-    from pyspark.sql.types import DoubleType
-
-    from clp_spark.operators.json_search import JsonArchive
-    from clp_spark.operators.kql import parse_kql
-
+def json_archive_members(
+    root: str, archive_id: str | None = None
+) -> list[str]:
+    """The member archives `s <archives-dir>` searches: every JSON archive
+    under `root`, or only the one named `archive_id` (the clp-s
+    `--archive-id` flag). Raises ValueError when none is left."""
     dirs = discover_json_archives(root)
     if archive_id is not None:
         dirs = [d for d in dirs if os.path.basename(d) == archive_id]
@@ -1161,62 +974,105 @@ def search_json_archives(
             raise ValueError(f"no archive '{archive_id}' under {root}")
     if not dirs:
         raise ValueError(f"{root} contains no JSON archives")
-    # Catalog step: the per-archive manifests ARE the catalog rows (one
-    # small driver read each, same as text federation's metadata.json).
-    # Tables then group by SCHEMA SIGNATURE — schema_id is a content hash
-    # of (path, kind) leaves, so identical shapes across archives share an
-    # id — and each group reads as ONE multi-directory scan. Plan size is
-    # O(distinct schemas), not O(archives x schemas); the whole directory
-    # searches as one job regardless of archive count.
+    return dirs
+
+
+def search_json_members(
+    spark: SparkSession,
+    dirs: list[str],
+    query: str,
+    ignore_case: bool = False,
+    timestamp_key: str | None = None,
+    tge: int | None = None,
+    tle: int | None = None,
+    telemetry_sink: list | None = None,
+) -> DataFrame:
+    """KQL search over compressed JSON archive directories → one DataFrame
+    (archive_id, log_event_idx, json) — the one clp-s `s` plan; a single
+    archive is a fleet of one (the reference loops one per-archive search
+    over every archive it is given, clp-s.cpp:437). No raw JSON is
+    re-parsed: each non-pruned schema's typed parquet table is scanned
+    with the compiled predicate and matching records are rebuilt with the
+    same expression as `x` (schema-match pruning means a schema whose
+    columns can't satisfy the query costs zero I/O beyond its manifest
+    entry).
+
+    Catalog step: the member manifests ARE the catalog rows (one small
+    driver read each, same as text federation's metadata.json). Per
+    member, in the reference's stage order (clp-s.cpp:222-236): '$'
+    range-index filters rewrite into log_event_idx bounds from that
+    member's own range index (EvaluateRangeIndexFilters), and a rewrite
+    that folds to constant false prunes the member; then a stored
+    [begin, end] time range disjoint from ``tge``/``tle`` (the CLI's
+    explicit epoch-ms range flags) prunes it (EvaluateTimestampIndex —
+    range conditions inside the KQL text do not trigger this prune).
+    Tables then group by SCHEMA SIGNATURE and rewrite — schema_id is a
+    content hash of (path, kind) leaves, so identical shapes across
+    members share an id — and each group reads as ONE multi-directory
+    scan: plan size is O(distinct schemas), not O(archives x schemas),
+    and the whole list searches as one job.
+
+    Array-leaf probes: unstructured arrays were stored as their JSON
+    text; a variant of just the array subtree is synthesized per schema
+    so the shared compile path (json_search._array_probe) works
+    unchanged. Scalar-root records carry no keys and are never matched.
+    ``timestamp_key`` overrides each member's recorded key for
+    comparisons (clp-s normalization: double = epoch seconds → ms; digit
+    strings → ms) without altering the reconstructed output.
+
+    ``telemetry_sink``, when a list, receives one dict per member with
+    the counters the reference's per-archive span records
+    (SearchTelemetry.hpp SearchResultMetrics + the termination stage):
+    archive_id, num_archive_records, num_matched_schemas,
+    num_archive_records_matching_schemas, termination_stage
+    ("range_index_matching" / "time_range_matching" for members pruned
+    during the manifest sweep, "schema_matching" when no schema of the
+    member can match, "" otherwise). Result rows then also carry a
+    ``__sid__`` schema-id column so the caller can count schemas with
+    matches; callers drop it before output."""
+    from clp_spark.operators.json_search import (
+        JsonArchive,
+        normalize_ts_column,
+    )
     from clp_spark.operators.kql import (
         evaluate_range_index_filters,
         fold_range_index_const,
         has_range_index_filter,
+        parse_kql,
     )
+    from clp_spark.sources.logfiles import decode_file_uri_expr
 
     base_ast = parse_kql(query)
     has_meta = has_range_index_filter(base_ast)
+    records = telemetry_sink if telemetry_sink is not None else []
     groups: dict[tuple, dict] = {}
-    scalar_paths: list[str] = []
     for d in dirs:
         with open(os.path.join(d, _MANIFEST)) as f:
             manifest = json.load(f)
         eff_ts = timestamp_key if timestamp_key is not None else manifest.get(
             "timestamp_key"
         )
-        t_rec = None
-        if telemetry_sink is not None:
-            t_rec = {
-                "archive_id": os.path.basename(os.path.normpath(d)),
-                "num_archive_records": _manifest_record_count(manifest),
-                "termination_stage": "",
-            }
-            telemetry_sink.append(t_rec)
-        # '$'-namespace filters rewrite PER ARCHIVE (each has its own range
-        # index); archives whose rewrite folds to constant false are pruned
-        # before any footer I/O, and the rest group by the rewritten AST so
-        # fleets sharing a rewrite (e.g. no matching file anywhere) still
-        # scan as one plan per (schema, rewrite). Stage order matches the
-        # reference AND the single-archive path: range index first, then
-        # the timestamp index (clp-s.cpp:222-236).
+        rec = {
+            "archive_id": os.path.basename(os.path.normpath(d)),
+            "num_archive_records": _manifest_record_count(manifest),
+            "num_matched_schemas": 0,
+            "num_archive_records_matching_schemas": 0,
+            "termination_stage": "",
+        }
+        records.append(rec)
         d_ast, ast_key = base_ast, ""
         if has_meta:
             d_ast = evaluate_range_index_filters(
                 base_ast, manifest.get("range_index"), IDX_COL, ignore_case
             )
             if fold_range_index_const(d_ast, IDX_COL) is False:
-                if t_rec is not None:
-                    t_rec["termination_stage"] = "range_index_matching"
+                rec["termination_stage"] = "range_index_matching"
                 continue
             # the rewritten bounds are this archive's own: archives share a
             # scan group only when their rewrites are equal
             ast_key = repr(d_ast)
-        # archive-level timestamp prune (EvaluateTimestampIndex,
-        # clp-s.cpp:230-236): stored [begin, end] disjoint from the
-        # search window → the archive contributes nothing, skip it
         if _manifest_time_disjoint(manifest, timestamp_key, tge, tle):
-            if t_rec is not None:
-                t_rec["termination_stage"] = "time_range_matching"
+            rec["termination_stage"] = "time_range_matching"
             continue
         for entry in manifest["schemas"]:
             if entry["schema_id"] == _SCALAR_ID:
@@ -1234,31 +1090,35 @@ def search_json_archives(
             g = groups.setdefault(
                 key,
                 {"leaves": [(tuple(p), k) for p, k in entry["leaves"]],
-                 "paths": [], "dirs": [], "ddl": entry.get("ddl"),
+                 "paths": [], "members": [], "ddl": entry.get("ddl"),
                  "ast": d_ast, "ts_patterns": []},
             )
             g["paths"].append(
                 os.path.join(d, _COMBINED_DIR) if combined
                 else os.path.join(d, f"schema_id={entry['schema_id']}")
             )
-            g["dirs"].append(d)
+            g["members"].append((d, rec, entry.get("rows", 0)))
             for p in manifest.get("timestamp_patterns") or []:
                 if p not in g["ts_patterns"]:
                     g["ts_patterns"].append(p)
+    # borrow JsonArchive's compiler without (re)building an in-memory
+    # archive; metadata maps the order column so bare-value filters skip it
     compiler = JsonArchive.__new__(JsonArchive)
     compiler.metadata = {IDX_COL: None}
-    # archive_id recovers from the file path (…/<archive_id>/schema_id=…
-    # or …/<archive_id>/combined_tables/…) — a pure projection, no extra
-    # column stored
+    # archive_id recovers from the (decoded) file path
+    # (…/<archive_id>/schema_id=… or …/<archive_id>/combined_tables/…) —
+    # a pure projection, no extra column stored
     aid_col = F.regexp_extract(
-        F.input_file_name(),
+        decode_file_uri_expr(F.input_file_name()),
         rf"/([^/]+)/(?:schema_id=|{_COMBINED_DIR}/)",
         1,
     ).alias("archive_id")
     out: DataFrame | None = None
     for (sid, structurize, eff_ts, _fmt, has_order, combined, _ak), g in groups.items():
         ast = g["ast"]
-        lazy_dirs = [d for d in g["dirs"] if _packed_reader(d) is not None]
+        lazy_dirs = [
+            d for d, _r, _n in g["members"] if _packed_reader(d) is not None
+        ]
         if lazy_dirs and _ddl_prunes(
             spark,
             {"ddl": g["ddl"]},
@@ -1294,6 +1154,7 @@ def search_json_archives(
         else:
             tbl = spark.read.parquet(*g["paths"])
         leaves = g["leaves"]
+        # reconstruction expression FIRST, from the untouched typed columns
         work = tbl.withColumn("__json__", _rebuild_expr(tbl, leaves, structurize))
         arr_leaves = [
             (p, k[len("array:"):]) for p, k in leaves if k.startswith("array:")
@@ -1305,10 +1166,8 @@ def search_json_archives(
             )
             work = work.withColumn("__v__", F.parse_json(varr))
         if eff_ts and eff_ts in work.columns:
-            from clp_spark.operators.json_search import normalize_ts_column
-
             norm = normalize_ts_column(
-                work, eff_ts, patterns=g.get("ts_patterns") or None
+                work, eff_ts, patterns=g["ts_patterns"] or None
             )
             if norm is not None:
                 work = work.withColumn(eff_ts, norm)
@@ -1324,18 +1183,70 @@ def search_json_archives(
         )
         if pred is None:
             continue  # schema pruned — across EVERY archive holding it
+        for _d, rec, rows in g["members"]:
+            rec["num_matched_schemas"] += 1
+            rec["num_archive_records_matching_schemas"] += rows
         hit = work.where(pred).select(
             aid_col,
             (F.col(IDX_COL) if has_order else F.lit(None).cast("long"))
-            .alias("log_event_idx"),
+            .alias(IDX_COL),
             F.col("__json__").alias("json"),
+            *(
+                [F.lit(sid).alias(_SID_COL)]
+                if telemetry_sink is not None else []
+            ),
         )
         out = hit if out is None else out.unionAll(hit)
+    for rec in records:
+        if not rec["termination_stage"] and not rec["num_matched_schemas"]:
+            rec["termination_stage"] = "schema_matching"
     if out is None:
+        # every schema pruned: an empty result with the result schema —
+        # built directly so no table is read (matters for packed archives,
+        # where a read would ranged-extract members just to return nothing)
         return spark.createDataFrame(
             [], "archive_id string, log_event_idx long, json string"
+            + (f", {_SID_COL} string" if telemetry_sink is not None else ""),
         )
     return out
+
+
+def search_json_archive(
+    spark: SparkSession,
+    archive_dir: str,
+    query: str,
+    ignore_case: bool = False,
+    timestamp_key: str | None = None,
+    tge: int | None = None,
+    tle: int | None = None,
+) -> DataFrame:
+    """clp-s `s <archive> <query>` over one compressed JSON archive →
+    (log_event_idx, json): ``search_json_members`` over a fleet of one."""
+    return search_json_members(
+        spark, [archive_dir], query, ignore_case=ignore_case,
+        timestamp_key=timestamp_key, tge=tge, tle=tle,
+    ).drop("archive_id")
+
+
+def search_json_archives(
+    spark: SparkSession,
+    root: str,
+    query: str,
+    ignore_case: bool = False,
+    timestamp_key: str | None = None,
+    archive_id: str | None = None,
+    tge: int | None = None,
+    tle: int | None = None,
+    telemetry_sink: list | None = None,
+) -> DataFrame:
+    """clp-s `s <archives-dir> <query>` over a DIRECTORY of JSON archives →
+    (archive_id, log_event_idx, json): ``search_json_members`` over
+    ``json_archive_members(root, archive_id)``."""
+    return search_json_members(
+        spark, json_archive_members(root, archive_id), query,
+        ignore_case=ignore_case, timestamp_key=timestamp_key,
+        tge=tge, tle=tle, telemetry_sink=telemetry_sink,
+    )
 
 
 def compress_jsonl_archives_multi(

@@ -622,6 +622,25 @@ class TestClpSOutputHandlers:
         assert path == "" and aid == "jarch"
         assert isinstance(ix, int)
 
+    def test_file_handler_archive_id_is_the_dir_name(
+        self, spark, tmp_path, capsys
+    ):
+        """A member whose name percent-encodes in a file URI keeps its own
+        name in the archive-id slot, searched alone or in its fleet."""
+        src = tmp_path / "in.jsonl"
+        src.write_text('{"n": 1}\n')
+        root = tmp_path / "fleet"
+        for name in ("plain", "a b%1"):
+            cli.main(["c", str(root / name), str(src), "--json"])
+        capsys.readouterr()
+        dest = tmp_path / "results.bin"
+        for target in (root, root / "a b%1"):
+            cli.main(["s-kql", str(target), "n: 1", "--output-handler",
+                      "file", "--path", str(dest)])
+            aids = sorted(t[3] for t in self._decode_stream(dest.read_bytes()))
+            assert aids == (["a b%1", "plain"] if target == root
+                            else ["a b%1"])
+
     def test_network_handler(self, archive, tmp_path, capsys):
         import socket
         import threading

@@ -1249,3 +1249,80 @@ class TestStringTsAggregates:
             for ln in capsys.readouterr().out.strip().splitlines()
         )
         assert got == ["b", "c"]  # the two LATEST by parsed string ts
+
+
+class TestOneArchiveRoute:
+    """`s-kql ARCHIVE q` and `s-kql ROOT q --archive-id NAME` are one route:
+    the same member search over a fleet of one, on every archive layout."""
+
+    @pytest.fixture(scope="class")
+    def fleet(self, spark, tmp_path_factory):
+        from clp_spark import cli
+
+        d = tmp_path_factory.mktemp("route_parity")
+        src = d / "in.jsonl"
+        # three schemas, so --min-table-size has tables to combine
+        recs = []
+        for i in range(12):
+            r = {"ts": 1700000000000 + i * 500, "n": i}
+            if i % 3 == 0:
+                r.update(lvl="ERROR", err={"code": i})
+            elif i % 3 == 1:
+                r.update(lvl="INFO", tags=[i, "x"])
+            else:
+                r.update(lvl="INFO", f=i * 1.5)
+            recs.append(json.dumps(r) + "\n")
+        src.write_text("".join(recs))
+        root = d / "root"
+        for name, extra in (
+            ("ordered", []),
+            ("unordered", ["--disable-log-order"]),
+            ("combined", ["--min-table-size", "1000000"]),
+            ("packed", ["--single-file-archive"]),
+        ):
+            cli.main(["c", str(root / name), str(src), "--json",
+                      "--timestamp-key", "ts", *extra])
+        return str(root), str(src)
+
+    @pytest.mark.parametrize("name,query", [
+        ("ordered", "lvl: ERROR OR n >= 10"),
+        ("unordered", "lvl: ERROR OR n >= 10"),
+        ("combined", "lvl: ERROR OR n >= 10"),
+        ("packed", "lvl: ERROR OR n >= 10"),
+        ("ordered", '$_filename: "{src}" AND lvl: ERROR'),
+    ])
+    def test_archive_and_archive_id_print_the_same(
+        self, fleet, name, query, capsys
+    ):
+        from clp_spark import cli
+
+        root, src = fleet
+        query = query.format(src=src)
+        capsys.readouterr()
+        cli.main(["s-kql", os.path.join(root, name), query])
+        direct = capsys.readouterr().out
+        cli.main(["s-kql", root, query, "--archive-id", name])
+        assert capsys.readouterr().out == direct
+        assert len(direct.splitlines()) == (4 if "$_" in query else 6)
+
+
+def test_archive_id_selects_timestamp_key(spark, tmp_path, capsys):
+    """The timestamp key comes from the archive --archive-id selects, not
+    from the first archive under the root."""
+    from clp_spark import cli
+
+    root = tmp_path / "root"
+    for name, key in (("a0", None), ("a1", "ts")):
+        src = tmp_path / f"{name}.jsonl"
+        src.write_text("".join(
+            json.dumps({"ts": 1700000000000 + i * 1000, "m": i}) + "\n"
+            for i in range(3)
+        ))
+        cli.main(["c", str(root / name), str(src), "--json",
+                  *(["--timestamp-key", key] if key else [])])
+    capsys.readouterr()
+    cli.main(["s-kql", str(root), "m: *", "--archive-id", "a1",
+              "--count-by-time", "1000"])
+    assert capsys.readouterr().out.split() == [
+        "1700000000000", "1", "1700000001000", "1", "1700000002000", "1",
+    ]

@@ -290,3 +290,12 @@ class TestAttachDictVarIds:
         # the shuffle path plans a shuffle join for the dictionary lookup
         splan = s._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in splan or "ShuffledHashJoin" in splan
+
+
+def test_count_by_time_needs_message_timestamps(pipeline_out):
+    """Token-pipeline sinks carry no per-message timestamps: `s
+    --count-by-time` exits with an error that names the flag."""
+    from clp_spark import cli
+
+    with pytest.raises(SystemExit, match="--count-by-time"):
+        cli.main(["s", pipeline_out, "*", "--count-by-time", "1000"])

@@ -462,6 +462,37 @@ def test_cli_single_file_archive_lifecycle(tmp_path):
     assert hits == [{"ts": 2, "msg": "beta", "code": 404}]
 
 
+def test_cli_split_single_file_archives_with_stats(spark, tmp_path, capsys):
+    """c --json --target-encoded-size --single-file-archive
+    --print-archive-stats: every split archive is packed into one file
+    whose stats line carries its packed size, and the packed fleet
+    searches whole."""
+    from clp_spark import cli
+
+    src = tmp_path / "in.jsonl"
+    src.write_text("".join(
+        json.dumps({"i": i, "pad": "x" * 40}) + "\n" for i in range(120)
+    ))
+    root = tmp_path / "root"
+    cli.main(["c", str(root), str(src), "--json", "--target-encoded-size",
+              "2000", "--single-file-archive", "--print-archive-stats"])
+    *stats, summary = [
+        json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()
+    ]
+    assert summary["archives"] >= 3
+    assert len(stats) == summary["archives"]
+    for st in stats:
+        packed = root / st["id"]
+        assert is_single_file_archive(str(packed))
+        assert st["size"] == packed.stat().st_size
+    cli.main(["s-kql", str(root), "i >= 100"])
+    got = sorted(
+        json.loads(ln)["i"]
+        for ln in capsys.readouterr().out.strip().splitlines()
+    )
+    assert got == list(range(100, 120))
+
+
 def test_cli_single_file_archive_requires_json(tmp_path):
     src = tmp_path / "in.log"
     src.write_text("hello\n")
