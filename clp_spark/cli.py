@@ -287,19 +287,28 @@ def cmd_compress(args) -> None:
             summary = compress_jsonl_archives_multi(
                 df, "raw", args.archive, args.target_encoded_size, **kw
             )
-            dirs = [s["dir"] for s in summary["per_archive"]]
+            # (archive dir, final path) pairs
+            outs = [(s["dir"], s["dir"]) for s in summary["per_archive"]]
         else:
-            summary = compress_jsonl_archive(df, "raw", args.archive, **kw)
-            dirs = [os.path.normpath(args.archive)]
-        stats_lines = []
-        for d in dirs:
-            if args.print_archive_stats:
-                stats_lines.append(archive_stats(d))
+            out = os.path.normpath(args.archive)
+            # a packed archive is staged beside its final path, so a
+            # re-run over an existing packed file replaces it
+            stage = out + ".unpacked" if args.single_file_archive else out
+            summary = compress_jsonl_archive(df, "raw", stage, **kw)
             if args.single_file_archive:
-                # pack the archive dir into one file under the same name
+                summary["dir"] = args.archive
+            outs = [(stage, out)]
+        stats_lines = []
+        for d, final in outs:
+            if args.print_archive_stats:
+                stats_lines.append(archive_stats(d) | {
+                    "id": os.path.basename(final)
+                })
+            if args.single_file_archive:
+                # pack the archive dir into one file at its final path
                 # (ArchiveWriter.cpp:145-147 writes archives_dir/id and
                 # removes the directory)
-                packed = d + ".sfa"
+                packed = final + ".sfa"
                 sfa = pack_archive(
                     d, packed,
                     timestamp_dict=(
@@ -308,14 +317,14 @@ def cmd_compress(args) -> None:
                     ),
                 )
                 shutil.rmtree(d)
-                os.replace(packed, d)
+                os.replace(packed, final)
                 if stats_lines:
                     # compressed size = the packed file, like the
                     # reference's single-file ArchiveStats
-                    stats_lines[-1]["size"] = os.path.getsize(d)
+                    stats_lines[-1]["size"] = os.path.getsize(final)
         if args.single_file_archive:
             if args.target_encoded_size is not None:
-                summary["single_file_archives"] = len(dirs)
+                summary["single_file_archives"] = len(outs)
             else:
                 summary["single_file_archive"] = sfa
         for line in stats_lines:
@@ -749,6 +758,9 @@ def cmd_search(args) -> None:
     else:
         queries = _search_query_list(args)
     spark = _spark(args.master)
+    # --count wins over --count-by-time in the tail below: only a time
+    # count drops messages with no timestamp (they have no time bucket)
+    timed_count = args.count_by_time is not None and not args.count
     # archives DIRECTORY (clg semantics: search every archive, time-pruned)
     # vs a single archive dir — detected by where sinks/ lives
     local_root = args.archive.removeprefix("file:")
@@ -771,17 +783,16 @@ def cmd_search(args) -> None:
         if args.file_path:
             # clg --file-path: only messages from one original file
             res = res.where(_file_path_pred(F.col("source"), args.file_path))
-        if args.count_by_time is not None and "ts_ms" in res.columns:
-            # a message with no timestamp has no time bucket
+        if timed_count and "ts_ms" in res.columns:
             res = res.where(F.col("ts_ms").isNotNull())
     else:
         from pyspark.errors import AnalysisException
 
         from clp_spark.operators.search import search_archive_dir
 
-        # --file-path / --tge / --tle (and --count-by-time, which drops
-        # messages with no timestamp) filter the encoded rows before the
-        # decode; sinks partition on file_id, so --file-path prunes the scan
+        # --file-path / --tge / --tle (and a time count's timestamp check)
+        # filter the encoded rows before the decode; sinks partition on
+        # file_id, so --file-path prunes the scan
         conds = []
         if args.file_path:
             conds.append(_file_path_pred(F.col("file_id"), args.file_path))
@@ -789,7 +800,7 @@ def cmd_search(args) -> None:
             conds.append(F.col("ts_ms") >= F.lit(args.tge))
         if args.tle is not None:
             conds.append(F.col("ts_ms") <= F.lit(args.tle))
-        if args.count_by_time is not None:
+        if timed_count:
             conds.append(F.col("ts_ms").isNotNull())
         try:
             res = search_archive_dir(
@@ -842,11 +853,11 @@ def _emit_search_telemetry(
     Every span carries the member's record count and termination stage;
     pruned members also carry the (zero) match counters. ``matches`` —
     (records matching the query, schemas with matches), measured on the
-    result — exists only for a one-member search: in a larger fleet's
-    one-job plan per-archive match attribution does not exist, so its
-    scanned members omit the match counters (documented in STATUS.md).
-    A failure marks every span failed, like the reference's per-archive
-    error recording."""
+    result — is computed only for a one-member search; scanned members of
+    a larger fleet omit the match counters (documented in STATUS.md),
+    although the result rows carry ``archive_id`` and ``__sid__`` that a
+    per-member aggregation could attribute them from. A failure marks
+    every span failed, like the reference's per-archive error recording."""
     from clp_spark.operators.telemetry import SearchTelemetrySpan, export_spans
 
     payloads = []

@@ -1237,7 +1237,6 @@ def search_json_archives(
     archive_id: str | None = None,
     tge: int | None = None,
     tle: int | None = None,
-    telemetry_sink: list | None = None,
 ) -> DataFrame:
     """clp-s `s <archives-dir> <query>` over a DIRECTORY of JSON archives →
     (archive_id, log_event_idx, json): ``search_json_members`` over
@@ -1245,7 +1244,7 @@ def search_json_archives(
     return search_json_members(
         spark, json_archive_members(root, archive_id), query,
         ignore_case=ignore_case, timestamp_key=timestamp_key,
-        tge=tge, tle=tle, telemetry_sink=telemetry_sink,
+        tge=tge, tle=tle,
     )
 
 

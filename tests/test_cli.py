@@ -43,6 +43,9 @@ def test_count_by_time_skips_untimestamped_lines(tmp_path, capsys):
     for target in (arch, str(tmp_path / "archives")):
         cli.main(["s", target, "task", "--count-by-time", "60000"])
         assert capsys.readouterr().out.split() == ["1704067200000", "1"]
+        # --count wins over --count-by-time and counts every match
+        cli.main(["s", target, "task", "--count", "--count-by-time", "60000"])
+        assert capsys.readouterr().out.split() == ["2"]
 
 
 def test_search_prints_messages(archive, capsys):

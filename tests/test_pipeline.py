@@ -299,3 +299,14 @@ def test_count_by_time_needs_message_timestamps(pipeline_out):
 
     with pytest.raises(SystemExit, match="--count-by-time"):
         cli.main(["s", pipeline_out, "*", "--count-by-time", "1000"])
+
+
+def test_count_wins_over_count_by_time(spark, pipeline_out, capsys):
+    """`s --count --count-by-time` prints the plain count (--count wins),
+    so a token-pipeline archive without timestamps still answers it."""
+    from clp_spark import cli
+
+    cli.main(["s", pipeline_out, "*", "--count"])
+    want = capsys.readouterr().out.split()
+    cli.main(["s", pipeline_out, "*", "--count", "--count-by-time", "1000"])
+    assert capsys.readouterr().out.split() == want

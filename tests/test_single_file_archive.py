@@ -462,6 +462,34 @@ def test_cli_single_file_archive_lifecycle(tmp_path):
     assert hits == [{"ts": 2, "msg": "beta", "code": 404}]
 
 
+def test_cli_single_file_archive_recompress_replaces(spark, tmp_path, capsys):
+    """c --json --single-file-archive onto an existing packed archive
+    replaces the file, and its stats line names the packed archive."""
+    from clp_spark import cli
+
+    sfa = tmp_path / "arch"
+    for n, lines in enumerate((LINES, LINES[:2])):
+        src = tmp_path / f"in{n}.jsonl"
+        src.write_text("\n".join(lines) + "\n")
+        cli.main(["c", str(sfa), str(src), "--json", "--single-file-archive",
+                  "--print-archive-stats"])
+        stats, summary = [
+            json.loads(ln)
+            for ln in capsys.readouterr().out.strip().splitlines()
+        ]
+        assert is_single_file_archive(str(sfa))
+        assert stats["id"] == "arch"
+        assert stats["size"] == sfa.stat().st_size
+        assert summary["dir"] == str(sfa)
+        assert not (tmp_path / "arch.unpacked").exists()
+        cli.main(["x", str(sfa)])
+        got = [
+            json.loads(ln)
+            for ln in capsys.readouterr().out.strip().splitlines()
+        ]
+        assert got == [json.loads(ln) for ln in lines]
+
+
 def test_cli_split_single_file_archives_with_stats(spark, tmp_path, capsys):
     """c --json --target-encoded-size --single-file-archive
     --print-archive-stats: every split archive is packed into one file
