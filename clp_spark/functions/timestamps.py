@@ -202,7 +202,8 @@ def strip_with_pattern(line: Column, pattern_name: Column) -> Column:
 
 
 def restore_timestamp(
-    message: Column, ts_ms: Column, pattern_name: Column
+    message: Column, ts_ms: Column, pattern_name: Column,
+    patterns: list[str] | None = None,
 ) -> Column:
     """Re-insert the timestamp text into a stripped message — the
     decompression inverse of `strip_with_pattern` (reference
@@ -219,9 +220,17 @@ def restore_timestamp(
     squash_ws patterns re-render with single spaces (the run-of-spaces
     information is not retained — same loss class as the reference's
     space-padded %e day). Rows with a NULL pattern or NULL ts pass through
-    unchanged (preamble/continuation-only messages)."""
+    unchanged (preamble/continuation-only messages).
+
+    ``patterns`` names the patterns the archive holds (its metadata.json
+    ``ts_patterns``): only those get a branch, as the reference re-renders
+    with the one pattern stored per file. None builds every known pattern
+    (archives without the key); [] builds none, so every row passes
+    through."""
     out = message
     for p in reversed(KNOWN_PATTERNS):
+        if patterns is not None and p.name not in patterns:
+            continue
         ts = F.timestamp_millis(ts_ms)
         if p.fmt.startswith("#epoch"):
             rendered = (ts_ms * _EPOCH_RENDER_MULT[p.fmt]).cast("string")

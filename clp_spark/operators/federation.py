@@ -82,21 +82,27 @@ def write_archive_metadata(
 ) -> dict:
     """Compute and persist the archive's catalog row (ArchiveMetadata.hpp
     analog): message count + ts_ms range (nulls when the archive has no
-    per-message timestamps, e.g. token-pipeline archives). ``extra`` merges
-    additional catalog fields (e.g. raw_bytes/archive_bytes for the
-    compression-ratio figure)."""
+    per-message timestamps, e.g. token-pipeline archives), plus the sorted
+    timestamp pattern names when the sinks carry ``ts_pat`` — the patterns
+    `s` and `x` re-render with (CLP stores each file's pattern in its
+    metadata). ``extra`` merges additional catalog fields (e.g.
+    raw_bytes/archive_bytes for the compression-ratio figure)."""
     sinks = spark.read.option("basePath", f"{archive_dir}/sinks").parquet(
         f"{archive_dir}/sinks"
     )
     aggs = [F.count("*").alias("messages")]
     if "ts_ms" in sinks.columns:
         aggs += [F.min("ts_ms").alias("begin"), F.max("ts_ms").alias("end")]
+    if "ts_pat" in sinks.columns:
+        aggs.append(F.collect_set("ts_pat").alias("pats"))
     row = sinks.agg(*aggs).collect()[0]
     meta = {
         "messages": int(row["messages"]),
         "begin_ts_ms": int(row["begin"]) if "ts_ms" in sinks.columns and row["begin"] is not None else None,
         "end_ts_ms": int(row["end"]) if "ts_ms" in sinks.columns and row["end"] is not None else None,
     }
+    if "ts_pat" in sinks.columns:
+        meta["ts_patterns"] = sorted(row["pats"])
     if extra:
         meta.update(extra)
     if "://" in archive_dir and not archive_dir.startswith("file:"):
@@ -117,6 +123,16 @@ def read_archive_metadata(archive_dir: str) -> dict | None:
         return None
     with open(path) as f:
         return json.load(f)
+
+
+def recorded_ts_patterns(archive_dir: str) -> list[str] | None:
+    """The timestamp pattern names a local archive's metadata.json records;
+    None when unknown (a remote archive, no metadata.json, or one written
+    before the key existed) — restore then tries every known pattern."""
+    if "://" in archive_dir and not archive_dir.startswith("file:"):
+        return None
+    meta = read_archive_metadata(archive_dir.removeprefix("file:"))
+    return (meta or {}).get("ts_patterns")
 
 
 def discover_archives(archives_dir: str) -> list[tuple[str, str]]:
@@ -141,15 +157,17 @@ def prune_archives_by_time(
     archives: list[tuple[str, str]],
     ts_lo: int | None,
     ts_hi: int | None,
+    metas: dict[str, dict | None] | None = None,
 ) -> list[tuple[str, str]]:
     """Keep archives whose [begin, end] overlaps [ts_lo, ts_hi]; an archive
     with no metadata or no timestamps is KEPT (superset — pruning is an
-    optimization, never a correctness gate)."""
+    optimization, never a correctness gate). ``metas`` (archive_id →
+    metadata) reuses catalog rows the caller already read."""
     if ts_lo is None and ts_hi is None:
         return archives
     kept = []
     for aid, path in archives:
-        meta = read_archive_metadata(path)
+        meta = metas[aid] if metas is not None else read_archive_metadata(path)
         if not meta or meta.get("begin_ts_ms") is None:
             kept.append((aid, path))
             continue
@@ -254,9 +272,21 @@ def search_archives(
     because every probe result is applied per-row (`isin` on the row's own
     dict vars) and every relaxation degrades to the mandatory final
     wildcard verification (superset, never a miss)."""
-    archives = prune_archives_by_time(discover_archives(archives_dir), ts_lo, ts_hi)
+    found = discover_archives(archives_dir)
+    metas = {aid: read_archive_metadata(path) for aid, path in found}
+    archives = prune_archives_by_time(found, ts_lo, ts_hi, metas)
     if not archives:
         return spark.createDataFrame([], _RESULT_SCHEMA)
+    # the timestamp patterns to re-render: the union of every searched
+    # member's recorded set, or all known patterns as soon as one member
+    # records none
+    ts_patterns: list[str] | None = []
+    for aid, _path in archives:
+        pats = (metas[aid] or {}).get("ts_patterns")
+        if pats is None:
+            ts_patterns = None
+            break
+        ts_patterns = sorted({*ts_patterns, *pats})
 
     from clp_spark.operators.schema_archive import (
         archive_schema_text,
@@ -284,7 +314,8 @@ def search_archives(
             query, var_u.select("var_value").distinct(), sf, ignore_case
         )
         parts.append(
-            _execute_compiled(spark, group, subs, query, ignore_case, ts_lo, ts_hi)
+            _execute_compiled(spark, group, subs, query, ignore_case, ts_lo, ts_hi,
+                              ts_patterns)
         )
 
     if heuristic:
@@ -293,7 +324,8 @@ def search_archives(
             query, var_u.select("var_value").distinct(), ignore_case
         )
         parts.append(
-            _execute_compiled(spark, heuristic, subs, query, ignore_case, ts_lo, ts_hi)
+            _execute_compiled(spark, heuristic, subs, query, ignore_case, ts_lo, ts_hi,
+                              ts_patterns)
         )
 
     if not parts:
@@ -309,11 +341,13 @@ def _execute_compiled(
     ignore_case: bool,
     ts_lo: int | None,
     ts_hi: int | None,
+    ts_patterns: list[str] | None,
 ) -> DataFrame:
     """Execute compiled subqueries (heuristic OR schema-aware — the SubQuery
     contract is shared) over one group of archives as ONE Spark plan:
     candidate (archive_id, logtype_id) sets resolved as joins, segment
-    pruning, decode, final wildcard verification."""
+    pruning, decode, final wildcard verification, timestamp re-render with
+    ``ts_patterns`` (None: every known pattern)."""
     if subs != MATCH_ALL and not subs:
         return spark.createDataFrame([], _RESULT_SCHEMA)
 
@@ -337,7 +371,8 @@ def _execute_compiled(
 
         df = df.withColumn(
             "message",
-            restore_timestamp(F.col("message"), F.col("ts_ms"), F.col("ts_pat")),
+            restore_timestamp(F.col("message"), F.col("ts_ms"), F.col("ts_pat"),
+                              ts_patterns),
         )
         return df.select(*_KEEP, "message")
 

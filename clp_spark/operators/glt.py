@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clp_spark.operators.search import ids_in
+
 GLT_MANIFEST = "_glt_manifest.json"
 
 # pruning is skipped when the candidate set outgrows this — an enormous
@@ -103,7 +105,7 @@ def glt_sinks_pruned(
         return sinks.where(F.lit(False)), []
     # bounded driver probe: candidate ids → logtype strings
     cands = (
-        logtype_dict.where(F.col("logtype_id").isin(list(ids)))
+        logtype_dict.where(ids_in("logtype_id", ids))
         .select("logtype")
         .collect()
     )

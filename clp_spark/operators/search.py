@@ -558,9 +558,19 @@ def _subsequence_pred(tagged: Column, needle: list[tuple[int, str]]) -> Column:
     return state == F.lit(k)
 
 
-def _ids_predicate(col: Column, ids: list | None) -> Column:
+def ids_in(col: str, ids: list) -> Column:
+    """``col IN (ids)`` over integer dictionary ids as ONE parsed
+    expression: `Column.isin` makes one py4j literal per id (0.29 s for
+    1,000 ids on a 4-core host, against under 1 ms for this). [] matches
+    nothing."""
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(str(int(i)) for i in ids)})")
+
+
+def _ids_predicate(col: str, ids: list | None) -> Column:
     """None = probe exceeded MAX_ISIN_IDS → no id constraint (superset)."""
-    return F.lit(True) if ids is None else col.isin(ids)
+    return F.lit(True) if ids is None else ids_in(col, ids)
 
 
 def candidate_logtype_ids(compiled) -> list | None:
@@ -635,11 +645,14 @@ def search_archive(
     query: str,
     ignore_case: bool = False,
     compiled=None,
+    ts_patterns: list[str] | None = None,
 ) -> DataFrame:
     """Matched rows (doc_id, source, logtype_id, message[, ts_ms]) for a CLP
     wildcard query; ts_ms comes along whenever the sinks carry it. Pass
     ``compiled`` (a compile_query result) to reuse an existing compilation
-    — e.g. after segment pruning already probed the dictionaries."""
+    — e.g. after segment pruning already probed the dictionaries.
+    ``ts_patterns`` is the archive's recorded timestamp patterns
+    (metadata.json); None re-renders with every known pattern."""
     # text-log archives carry each message's timestamp: it rides along in
     # the result (count-by-time, latest-N and the binary/network outputs
     # read it there) and, with a stored pattern, is re-rendered into the
@@ -657,7 +670,8 @@ def search_archive(
 
             df = df.withColumn(
                 "message",
-                restore_timestamp(F.col("message"), F.col("ts_ms"), F.col("ts_pat")),
+                restore_timestamp(F.col("message"), F.col("ts_ms"),
+                                  F.col("ts_pat"), ts_patterns),
             )
         return df.select("doc_id", "source", "logtype_id", "message", *ts)
 
@@ -669,7 +683,7 @@ def search_archive(
     if not compiled:
         return _finish(decode_df(with_lt, keep).where(F.lit(False)))
     subqueries = compiled if compiled == MATCH_ALL else [
-        (_ids_predicate(F.col("logtype_id"), ids), sq) for ids, sq in compiled
+        (_ids_predicate("logtype_id", ids), sq) for ids, sq in compiled
     ]
     return _finish(verify_candidates(with_lt, subqueries, keep, query, ignore_case))
 
@@ -690,12 +704,15 @@ def search_archive_dir(
     The scan is narrowed by the GLT logtype tables (`lt_table` partition
     filter) on GLT archives, by the segment index (only the candidate
     `split=` directories are listed) when one exists, and not at all
-    otherwise; only local archives are probed for either. ``where`` is a
+    otherwise; only local archives are probed for either, and only a local
+    archive's metadata.json names the timestamp patterns to re-render
+    (others re-render with every known pattern). ``where`` is a
     predicate on the encoded sink columns (file and time filters), applied
     before the decode. Returns (results, scanned segment ids or GLT table
     names — None when the scan was not narrowed)."""
     import os
 
+    from clp_spark.operators.federation import recorded_ts_patterns
     from clp_spark.operators.glt import glt_sinks_pruned, read_glt_manifest
     from clp_spark.operators.schema_archive import (
         archive_schema_text,
@@ -740,8 +757,10 @@ def search_archive_dir(
         sinks = sinks.withColumn(
             "doc_id", F.concat_ws("#", "file_id", "msg_ix")
         ).withColumn("source", F.col("file_id"))
+    ts_patterns = recorded_ts_patterns(archive_dir)
     res = reduce(DataFrame.unionByName, [
-        search_archive(sinks, lt, vd, q, ignore_case, compiled=c)
+        search_archive(sinks, lt, vd, q, ignore_case, compiled=c,
+                       ts_patterns=ts_patterns)
         for q, c in zip(queries, compiled)
     ])
     if len(queries) > 1:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clp_spark.operators.search import ids_in
+
 
 def build_segment_index(spark: SparkSession, sinks_dir: str) -> DataFrame:
     """(logtype_id, segment) distinct pairs over a split-partitioned sink dir.
@@ -52,7 +54,7 @@ def matching_segments(
     if not logtype_ids:
         return []
     rows = (
-        seg_index.where(F.col("logtype_id").isin(logtype_ids))
+        seg_index.where(ids_in("logtype_id", logtype_ids))
         .select("segment")
         .distinct()
         .collect()

@@ -788,10 +788,13 @@ def decompress_file(
     compressors when pattern locking is on) get their timestamp text
     re-rendered into the message — the reference re-renders each message's
     timestamp from its stored pattern on decompression
-    (TimestampPattern.cpp insert_formatted_timestamp); pass
-    restore_timestamps=False for the raw stripped bodies."""
+    (TimestampPattern.cpp insert_formatted_timestamp) — with just the
+    patterns a local archive's metadata.json records, or every known one
+    when it records none; pass restore_timestamps=False for the raw
+    stripped bodies."""
     from clp_spark.functions.timestamps import restore_timestamp
     from clp_spark.operators.decode import decode_df
+    from clp_spark.operators.federation import recorded_ts_patterns
 
     sinks = spark.read.option("basePath", f"{out_dir}/sinks").parquet(f"{out_dir}/sinks")
     if file_id is not None:
@@ -819,7 +822,8 @@ def decompress_file(
     if has_pat and restore_timestamps:
         out = out.withColumn(
             "message",
-            restore_timestamp(F.col("message"), F.col("ts_ms"), F.col("ts_pat")),
+            restore_timestamp(F.col("message"), F.col("ts_ms"), F.col("ts_pat"),
+                              recorded_ts_patterns(out_dir)),
         )
     out = out.select(*keep, "message")
     # ordered=False skips the global range-partition sort for callers that
@@ -1036,6 +1040,7 @@ def compress_text_logs_multi(
             F.count("*").alias("messages"),
             F.min("ts_ms").alias("begin"),
             F.max("ts_ms").alias("end"),
+            *([F.collect_set("ts_pat").alias("pats")] if lock_patterns else []),
         )
         .collect()
     }
@@ -1074,6 +1079,8 @@ def compress_text_logs_multi(
             "raw_bytes": t.total_size,
             "archive_bytes": dir_bytes(root),
         }
+        if lock_patterns:
+            meta["ts_patterns"] = sorted(st["pats"])
         with open(os.path.join(root, METADATA_FILE + ".tmp"), "w") as f:
             json.dump(meta, f)
         os.replace(

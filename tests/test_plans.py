@@ -121,6 +121,7 @@ class TestSearchPlanParity:
         the library is overhead, not a different plan."""
         import re
 
+        from clp_spark.operators.federation import read_archive_metadata
         from clp_spark.operators.search import (
             compile_query,
             search_archive,
@@ -143,7 +144,8 @@ class TestSearchPlanParity:
         lt = spark.read.parquet(f"{arch}/logtype_dict")
         vd = spark.read.parquet(f"{arch}/var_dict")
         lib = search_archive(sinks, lt, vd, query,
-                             compiled=compile_query(query, lt, vd))
+                             compiled=compile_query(query, lt, vd),
+                             ts_patterns=read_archive_metadata(arch)["ts_patterns"])
         res, pruned = search_archive_dir(spark, arch, query)
 
         def norm(df):
@@ -152,6 +154,8 @@ class TestSearchPlanParity:
 
         assert pruned is None
         assert norm(res) == norm(lib)
+        # the archive holds one timestamp pattern: one re-render branch
+        assert norm(res).count("date_format(") == 1
         assert sorted(r["message"] for r in res.collect()) == sorted(
             r["message"] for r in lib.collect()
         )

@@ -85,3 +85,31 @@ def test_restore_passthrough_on_null(spark):
         restore_timestamp(F.col("body"), F.col("ts_ms"), F.col("pat")).alias("m")
     ).collect()
     assert got[0]["m"] == "no timestamp here"
+
+
+def test_restore_with_recorded_patterns_matches_full_chain(spark):
+    """An archive's recorded patterns restore exactly what the full chain
+    does: the row's own pattern alone or next to another gives the
+    full-chain line byte for byte, and no pattern passes every row
+    through unchanged."""
+    names = [n for n, _ in CASES]
+    body = strip_with_pattern(F.col("line"), F.col("pat"))
+    base = spark.createDataFrame(CASES, "pat string, line string").select(
+        "pat",
+        body.alias("body"),
+        parse_with_pattern(F.col("line"), F.col("pat")).alias("ts_ms"),
+    )
+    args = (F.col("body"), F.col("ts_ms"), F.col("pat"))
+    cols = [restore_timestamp(*args).alias("full"),
+            restore_timestamp(*args, []).alias("none")]
+    for i, n in enumerate(names):
+        other = names[(i + 1) % len(names)]
+        cols.append(restore_timestamp(*args, [n]).alias(f"one_{i}"))
+        cols.append(restore_timestamp(*args, [other, n]).alias(f"two_{i}"))
+    rows = base.select("pat", "body", *cols).collect()
+    assert len(rows) == len(CASES)
+    for r in rows:
+        i = names.index(r["pat"])
+        assert r["one_" + str(i)] == r["full"], (r["pat"], r["one_" + str(i)])
+        assert r["two_" + str(i)] == r["full"], (r["pat"], r["two_" + str(i)])
+        assert r["none"] == r["body"], r["pat"]
